@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   *     query's timing nor accumulate across passes and squeeze
   *     execution memory.
   *
-  * Besides the 62 gate queries, the production-mode perf twins
+  * Besides the gate queries, the production-mode perf twins
   * (`SparkEntry.perfQueries`: xxhash64 / Gaussian planes / hashed
   * shingles) are timed identically and reported under "prod" — the
   * headline "value" stays the gate-query total for round-over-round
@@ -48,11 +48,31 @@ object Bench {
   private final val SuspectRatio = 2.0
   private final val SuspectFloorSec = 1.0 // below this it's scheduling noise
 
-  private def median(xs: Seq[Double]): Double = {
+  /** Measured passes per query (after the warm-up). */
+  private[graft] def passes: Int = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
+
+  private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.isEmpty) 0.0
     else if (s.length % 2 == 1) s(s.length / 2)
     else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
+  }
+
+  /** `passes` timed runs of `name` at `dir`, each after a
+    * `clearCache()`. Stops at the first failing pass, whose time is
+    * kept, and returns that failure beside the times. */
+  private[graft] def timePasses(spark: SparkSession, name: String, dir: String,
+                                passes: Int): (Seq[Double], Option[Throwable]) = {
+    val q = SparkEntry.query(name)
+    val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+    var err: Option[Throwable] = None
+    while (times.length < passes && err.isEmpty) {
+      spark.catalog.clearCache()
+      val t0 = System.nanoTime()
+      try q(spark, dir).count() catch { case e: Throwable => err = Some(e) }
+      times += (System.nanoTime() - t0) / 1e9
+    }
+    (times.toSeq, err)
   }
 
   private def loadAvg(): Double =
@@ -78,21 +98,17 @@ object Bench {
     val loadAmbient = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
+    val cpus = GraftSession.cpus
     // the ENGINE session (GraftSession.builder): r15 found Bench had
     // drifted from the engine defaults — the join-strategy and
     // broadcast-safety configs (preferSortMergeJoin=false,
     // measured-sizes-only broadcasts) applied everywhere EXCEPT the
-    // session the driver actually times; master/partitions stay
-    // env-derived per the driver contract
-    val spark = GraftSession.builder(master = s"local[$cpus]",
-        shufflePartitions = cpus.toInt).getOrCreate()
+    // session the benchmark actually times
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val gateNames = SparkEntry.queries.keys.toSeq.sorted
     val prodNames = SparkEntry.perfQueries.keys.toSeq.sorted
-    def run(name: String, dir: String): Unit =
-      SparkEntry.queries.getOrElse(name, SparkEntry.perfQueries(name))(spark, dir).count()
+    def run(name: String, dir: String): Unit = SparkEntry.query(name)(spark, dir).count()
     val all = gateNames ++ prodNames
     Seq(warmDir, sfDir).foreach { dir =>
       all.foreach { name =>
@@ -115,23 +131,13 @@ object Bench {
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val passDetail = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
     def timeOnce(name: String): Seq[Double] = {
-      val times = scala.collection.mutable.ArrayBuffer.empty[Double]
-      var ok = true
-      var p = 0
-      while (p < passes && ok) {
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        try run(name, sfDir) catch {
-          case e: Throwable =>
-            ok = false
-            failed += name
-            System.err.println(s"[bench] $name FAILED at $sfDir: " +
-              s"${e.getClass.getSimpleName}: ${e.getMessage}")
-        }
-        times += (System.nanoTime() - t0) / 1e9
-        p += 1
+      val (times, err) = timePasses(spark, name, sfDir, passes)
+      err.foreach { e =>
+        failed += name
+        System.err.println(s"[bench] $name FAILED at $sfDir: " +
+          s"${e.getClass.getSimpleName}: ${e.getMessage}")
       }
-      times.toSeq
+      times
     }
     def measure(names: Seq[String]): Seq[(String, Double)] = names.map { name =>
       val times = timeOnce(name)

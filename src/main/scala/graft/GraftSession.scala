@@ -26,13 +26,18 @@ object GraftSession {
       }
   }
 
-  def builder(master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
-              shufflePartitions: Int = Runtime.getRuntime.availableProcessors()): SparkSession.Builder = withExtraConf(
+  /** Core count for the command-line mains (Bench, Verify, Diag):
+    * `SPARK_GRAFT_CPUS`, else every available processor. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** `local[cores]` with `cores` shuffle partitions. */
+  def builder(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession.Builder = withExtraConf(
     SparkSession.builder()
-      .master(master)
+      .master(s"local[$cores]")
       .appName("graft")
       .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

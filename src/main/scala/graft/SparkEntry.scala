@@ -26,6 +26,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
+  /** A gate query by name, else the production twin of that name; an
+    * unknown name fails listing every valid one. */
+  def query(name: String): (SparkSession, String) => DataFrame =
+    queries.getOrElse(name, perfQueries.getOrElse(name, throw new IllegalArgumentException(
+      s"unknown query '$name'; valid names: " +
+        (queries.keys ++ perfQueries.keys).toSeq.sorted.mkString(", "))))
+
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.table(s, dir, name)
 

@@ -68,12 +68,10 @@ object Verify {
         require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
         SparkEntry.queries.view.filterKeys(only).toMap
       }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the ENGINE session (GraftSession.builder) so correctness is
     // verified under exactly the configs the bench runs with (r15:
     // Verify had drifted — no AQE, no join-strategy configs)
-    val spark = GraftSession.builder(master = s"local[$cpus]",
-        shufflePartitions = cpus.toInt).getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>

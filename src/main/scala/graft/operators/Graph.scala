@@ -24,11 +24,17 @@ object Graph {
     * barrier (join + min-agg + checkpoint + probe) is the cost driver
     * and the round COUNT is data-dependent (eccentricity / peeling
     * depth), so a "sssp got slower" report needs this denominator.
-    * One stderr line per round — stays out of the query result and
-    * survives in driver logs at any scale. */
-  private def logRound(op: String, round: Int, startNanos: Long): Unit =
-    System.err.println(
-      s"[graft.graph] $op round=$round ${(System.nanoTime() - startNanos) / 1000000} ms")
+    * `loop` calls the function it is given at the start of each round;
+    * that round's jobs then carry the Spark job description
+    * `graft.graph <op> round=<n>` (UI, listeners, `Diag stages`). The
+    * caller's description is restored when the loop exits, also on a
+    * throw. */
+  private def labelRounds(df: DataFrame, op: String)(loop: (Int => Unit) => Unit): Unit = {
+    val sc = df.sparkSession.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    try loop(n => sc.setJobDescription(s"graft.graph $op round=$n"))
+    finally sc.setJobDescription(prev)
+  }
 
   /** PageRank over a directed edge list. Every node must have at
     * least one OUT edge (feed a bidirected edge list for undirected
@@ -255,27 +261,28 @@ object Graph {
       .localCheckpoint()
     var converged = false
     var round = 0
-    while (!converged && round < maxRounds) {
-      val t0 = System.nanoTime()
-      val neighborMin = sym.join(labels, col("__dst") === col("node"))
-        .groupBy(col("__src").as("node"))
-        .agg(min(col("component")).as("__nmin"))
-      // eager checkpoint = the round's materialization barrier AND
-      // lineage cut (see scaladoc); old checkpoint blocks are released
-      // by the context cleaner once `labels` is rebound
-      val updated = labels
-        .join(neighborMin.withColumnRenamed("node", "__nn"),
-          col("node") === col("__nn"), "left_outer")
-        .select(col("node"),
-          least(col("component"), coalesce(col("__nmin"), col("component"))).as("component"))
-        .localCheckpoint()
-      val changed = updated
-        .join(labels.withColumnRenamed("component", "__old"), "node")
-        .filter(col("component") =!= col("__old")).limit(1).count()
-      labels = updated
-      converged = changed == 0L
-      round += 1
-      logRound("concomp", round, t0)
+    labelRounds(edges, "concomp") { startRound =>
+      while (!converged && round < maxRounds) {
+        startRound(round + 1)
+        val neighborMin = sym.join(labels, col("__dst") === col("node"))
+          .groupBy(col("__src").as("node"))
+          .agg(min(col("component")).as("__nmin"))
+        // eager checkpoint = the round's materialization barrier AND
+        // lineage cut (see scaladoc); old checkpoint blocks are released
+        // by the context cleaner once `labels` is rebound
+        val updated = labels
+          .join(neighborMin.withColumnRenamed("node", "__nn"),
+            col("node") === col("__nn"), "left_outer")
+          .select(col("node"),
+            least(col("component"), coalesce(col("__nmin"), col("component"))).as("component"))
+          .localCheckpoint()
+        val changed = updated
+          .join(labels.withColumnRenamed("component", "__old"), "node")
+          .filter(col("component") =!= col("__old")).limit(1).count()
+        labels = updated
+        converged = changed == 0L
+        round += 1
+      }
     }
     sym.unpersist()
     if (!converged)
@@ -328,27 +335,28 @@ object Graph {
       .localCheckpoint()
     var converged = false
     var round = 0
-    while (!converged && round < maxRounds) {
-      val t0 = System.nanoTime()
-      val prop = e.join(dist, col("__src") === col("node"))
-        .groupBy(col("__dst").as("__nn"))
-        .agg(min(col("dist") + 1L).as("__nd"))
-      // full outer merge: newly-reached nodes enter, known nodes keep
-      // min(old, propagated); seeds stay at 0 by the min
-      val updated = dist
-        .join(prop, col("node") === col("__nn"), "full_outer")
-        .select(coalesce(col("node"), col("__nn")).as("node"),
-          least(coalesce(col("dist"), col("__nd")),
-            coalesce(col("__nd"), col("dist"))).as("dist"))
-        .localCheckpoint()
-      val changed = updated
-        .join(dist.withColumnRenamed("dist", "__old"), Seq("node"), "left_outer")
-        .filter(col("__old").isNull || col("dist") =!= col("__old"))
-        .limit(1).count()
-      dist = updated
-      converged = changed == 0L
-      round += 1
-      logRound("bfs", round, t0)
+    labelRounds(edges, "bfs") { startRound =>
+      while (!converged && round < maxRounds) {
+        startRound(round + 1)
+        val prop = e.join(dist, col("__src") === col("node"))
+          .groupBy(col("__dst").as("__nn"))
+          .agg(min(col("dist") + 1L).as("__nd"))
+        // full outer merge: newly-reached nodes enter, known nodes keep
+        // min(old, propagated); seeds stay at 0 by the min
+        val updated = dist
+          .join(prop, col("node") === col("__nn"), "full_outer")
+          .select(coalesce(col("node"), col("__nn")).as("node"),
+            least(coalesce(col("dist"), col("__nd")),
+              coalesce(col("__nd"), col("dist"))).as("dist"))
+          .localCheckpoint()
+        val changed = updated
+          .join(dist.withColumnRenamed("dist", "__old"), Seq("node"), "left_outer")
+          .filter(col("__old").isNull || col("dist") =!= col("__old"))
+          .limit(1).count()
+        dist = updated
+        converged = changed == 0L
+        round += 1
+      }
     }
     e.unpersist()
     if (!converged)
@@ -398,27 +406,28 @@ object Graph {
       .localCheckpoint()
     var converged = false
     var round = 0
-    while (!converged && round < maxRounds) {
-      val t0 = System.nanoTime()
-      val prop = e.join(dist, col("__src") === col("node"))
-        .select(col("__dst"), (col("dist") + col("__w")).as("__cand"))
-        .filter(col("__cand") <= maxCost)
-        .groupBy(col("__dst").as("__nn"))
-        .agg(min(col("__cand")).as("__nd"))
-      val updated = dist
-        .join(prop, col("node") === col("__nn"), "full_outer")
-        .select(coalesce(col("node"), col("__nn")).as("node"),
-          least(coalesce(col("dist"), col("__nd")),
-            coalesce(col("__nd"), col("dist"))).as("dist"))
-        .localCheckpoint()
-      val changed = updated
-        .join(dist.withColumnRenamed("dist", "__old"), Seq("node"), "left_outer")
-        .filter(col("__old").isNull || col("dist") =!= col("__old"))
-        .limit(1).count()
-      dist = updated
-      converged = changed == 0L
-      round += 1
-      logRound("sssp", round, t0)
+    labelRounds(edges, "sssp") { startRound =>
+      while (!converged && round < maxRounds) {
+        startRound(round + 1)
+        val prop = e.join(dist, col("__src") === col("node"))
+          .select(col("__dst"), (col("dist") + col("__w")).as("__cand"))
+          .filter(col("__cand") <= maxCost)
+          .groupBy(col("__dst").as("__nn"))
+          .agg(min(col("__cand")).as("__nd"))
+        val updated = dist
+          .join(prop, col("node") === col("__nn"), "full_outer")
+          .select(coalesce(col("node"), col("__nn")).as("node"),
+            least(coalesce(col("dist"), col("__nd")),
+              coalesce(col("__nd"), col("dist"))).as("dist"))
+          .localCheckpoint()
+        val changed = updated
+          .join(dist.withColumnRenamed("dist", "__old"), Seq("node"), "left_outer")
+          .filter(col("__old").isNull || col("dist") =!= col("__old"))
+          .limit(1).count()
+        dist = updated
+        converged = changed == 0L
+        round += 1
+      }
     }
     e.unpersist()
     if (!converged)
@@ -498,22 +507,23 @@ object Graph {
     var eCount = e.count()
     var converged = false
     var round = 0
-    while (!converged && round < maxRounds) {
-      val t0 = System.nanoTime()
-      val alive = e.groupBy(col("__src")).agg(count(lit(1)).as("__deg"))
-        .filter(col("__deg") >= k)
-        .select(col("__src").as("__a"))
-        .localCheckpoint()
-      val ne = e
-        .join(alive, col("__src") === col("__a"), "left_semi")
-        .join(alive.withColumnRenamed("__a", "__b"), col("__dst") === col("__b"), "left_semi")
-        .localCheckpoint()
-      val nc = ne.count()
-      converged = nc == eCount
-      e = ne
-      eCount = nc
-      round += 1
-      logRound("kcore", round, t0)
+    labelRounds(edges, "kcore") { startRound =>
+      while (!converged && round < maxRounds) {
+        startRound(round + 1)
+        val alive = e.groupBy(col("__src")).agg(count(lit(1)).as("__deg"))
+          .filter(col("__deg") >= k)
+          .select(col("__src").as("__a"))
+          .localCheckpoint()
+        val ne = e
+          .join(alive, col("__src") === col("__a"), "left_semi")
+          .join(alive.withColumnRenamed("__a", "__b"), col("__dst") === col("__b"), "left_semi")
+          .localCheckpoint()
+        val nc = ne.count()
+        converged = nc == eCount
+        e = ne
+        eCount = nc
+        round += 1
+      }
     }
     if (!converged)
       throw new IllegalStateException(

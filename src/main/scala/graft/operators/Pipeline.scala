@@ -495,15 +495,22 @@ object Pipeline {
     * caller's inheritable thread-locals (job group/description) it was
     * created under. Every task runs to completion; the first failure
     * is rethrown only after ALL finish, so a caller never proceeds to
-    * a downstream step while a sibling write is still in flight. */
+    * a downstream step while a sibling write is still in flight, with
+    * every other failure attached as suppressed. Fatal errors are
+    * caught too: left uncaught in a worker thread they would vanish
+    * and the caller would proceed. */
   private[operators] def inParallel(tasks: (() => Unit)*): Unit = {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = tasks.map { t =>
-      val th = new Thread(() => try t() catch { case e: Throwable => errs.add(e) })
+    val threads = tasks.zipWithIndex.map { case (t, i) =>
+      val th = new Thread(() => try t() catch { case e: Throwable => errs.add(e) },
+        s"graft-parallel-$i")
       th.start(); th
     }
     threads.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    Option(errs.poll()).foreach { first =>
+      errs.forEach(e => if (e ne first) first.addSuppressed(e))
+      throw first
+    }
   }
 
   /** Stages 1–2 of corpus preparation (quality gate + PII scrub) —

@@ -181,10 +181,14 @@ object Similarity {
     // threads (guide §2.6) so the build pays ~one corpus-pass wall
     // instead of three sequential ones. A fresh build has no crash
     // contract between them (a crash = rerun the build; `_driftbase`
-    // has no `=` in its name, so partition discovery skips it).
+    // has no `=` in its name, so partition discovery skips it). The old
+    // store is deleted up front and the index APPENDS into the empty
+    // path: an Overwrite would delete the base path at its start and
+    // could wipe a `_driftbase` write that landed first.
+    StoreProtocol.fsOf(corpus.sparkSession, path).delete(new org.apache.hadoop.fs.Path(path), true)
     val writeIndex = () => {
       corpus.withColumn("__cell", element_at(cell1, 1))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .write.mode(org.apache.spark.sql.SaveMode.Append)
         .partitionBy("__cell").parquet(path)
       ()
     }

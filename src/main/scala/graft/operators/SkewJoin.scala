@@ -1,48 +1,21 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-resilient equi-join via key salting.
   *
   * AQE's skew-join splitting (on by default in GraftSession) handles
   * most skew at runtime; explicit salting remains the tool when one
-  * side has a few pathological hot keys known in advance (the classic
-  * null-key / default-value / celebrity-entity cases in web-scale
-  * corpora), or when the join sits inside a cached/checkpointed
-  * subtree AQE never re-plans.
-  *
-  * Two variants:
-  *   - [[saltedJoin]]: the whole skewed side is salted and the whole
-  *     other side replicated `factor` ways — right when skew is known
-  *     and the other side is a small dimension (replication is cheap).
-  *   - [[hotKeyJoin]]: hot keys are DETECTED (one partial-agg'd count
-  *     pass), only their rows are salted/replicated, and the cold
-  *     remainder takes the plain join — right when the other side is
-  *     too big to replicate wholesale or the hot set isn't known
-  *     up front.
+  * side has a few pathological hot keys (the classic null-key /
+  * default-value / celebrity-entity cases in web-scale corpora), or
+  * when the join sits inside a cached/checkpointed subtree AQE never
+  * re-plans. [[hotKeyJoin]] DETECTS the hot keys (one partial-agg'd
+  * count pass), salts/replicates only their rows, and lets the cold
+  * remainder take the plain join. Its salt is a hash of the row's
+  * content, so the output never depends on task-retry order.
   */
 object SkewJoin {
-
-  /** Shape: the skewed (big) side gets a uniform random salt in
-    * [0, factor); the other side is replicated `factor` times with
-    * every salt value. The join key becomes (key, salt), splitting
-    * each hot key's rows across `factor` reducers. Replication
-    * multiplies the small side by `factor` — keep it the dimension
-    * side. */
-  def saltedJoin(skewed: DataFrame, other: DataFrame, key: String,
-                 factor: Int, joinType: String = "inner"): DataFrame = {
-    require(factor > 0, "salt factor must be positive")
-    // right/full outer would surface each unmatched replicated-side row
-    // `factor` times — reject rather than silently multiply rows
-    val normalized = joinType.toLowerCase.replace("_", "")
-    require(Set("inner", "left", "leftouter", "leftsemi", "leftanti").contains(normalized),
-      s"saltedJoin supports inner/left/left_semi/left_anti joins, got $joinType")
-    val salted = skewed.withColumn("__salt", (rand(42) * factor).cast("int"))
-    val replicated = other.withColumn("__salt",
-      explode(sequence(lit(0), lit(factor - 1))))
-    salted.join(replicated, Seq(key, "__salt"), joinType).drop("__salt")
-  }
 
   /** Inner equi-join on `key` with automatic heavy-hitter handling:
     * one partial-agg'd key count on the left finds keys hotter than

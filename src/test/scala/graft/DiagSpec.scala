@@ -1,0 +1,44 @@
+package graft
+
+class DiagSpec extends SparkSpec {
+  private val queries = Seq("q1_pricing_summary", "corpus_quantiles_prod")
+  private def diag(cmd: String, names: Seq[String] = queries): String =
+    Diag.run(spark, cmd +: sfDir +: names)
+
+  test("plan prints the formatted explain with the parquet scans") {
+    val out = diag("plan")
+    queries.foreach(q => assert(out.contains(s"=== $q ===")))
+    // formatted mode names the file scan node "Scan parquet"
+    assert(out.contains("Scan parquet") && out.contains("PushedFilters: ["), out)
+  }
+
+  test("metrics prints the final plan with per-node SQL metrics") {
+    val out = diag("metrics")
+    queries.foreach(q => assert(out.contains(s"=== $q  wall=")))
+    assert(out.contains("numOutputRows="), out)
+  }
+
+  test("stages prints a row per stage of the measured run") {
+    val out = diag("stages", Seq("q1_pricing_summary"))
+    val stageRows = out.linesIterator.filter(_.matches("^\\d+\\s+\\d+\\s.*"))
+    assert(stageRows.nonEmpty, out)
+  }
+
+  test("time prints a median per query") {
+    val out = diag("time")
+    queries.foreach(q => assert(out.linesIterator.exists(l =>
+      l.startsWith(q) && l.matches(".* median +\\d+\\.\\d{3} s  n=\\d+")), out))
+  }
+
+  test("audit returns a PLANS.md table row per query") {
+    val out = diag("audit", Seq("q1_pricing_summary"))
+    assert(out.linesIterator.exists(_.startsWith("| q1_pricing_summary (gate) | ")), out)
+    assert(out.contains("Totals: 1 queries audited, 0 flagged."), out)
+  }
+
+  test("an unknown query name throws and lists the valid names") {
+    val e = intercept[IllegalArgumentException](diag("plan", Seq("no_such_query")))
+    assert(e.getMessage.contains("no_such_query"))
+    assert(e.getMessage.contains("q1_pricing_summary") && e.getMessage.contains("corpus_quantiles_prod"))
+  }
+}

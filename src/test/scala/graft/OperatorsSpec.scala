@@ -1,30 +1,11 @@
 package graft
 
 import graft.core.Gds
-import graft.operators.SkewJoin
 import graft.sources.{FilePattern, ParquetSink}
 import org.apache.spark.sql.functions._
 
 class OperatorsSpec extends SparkSpec {
   import spark.implicits._
-
-  test("saltedJoin produces the same result as a plain join under skew") {
-    // 90% of fact rows share one hot key
-    val fact = (1 to 1000).map(i => (if (i <= 900) 1L else i.toLong, i)).toDF("k", "v")
-    val dim = Seq((1L, "hot"), (950L, "cold")).toDF("k", "name")
-    val plain = fact.join(dim, Seq("k")).select("k", "v", "name")
-    val salted = SkewJoin.saltedJoin(fact, dim, "k", factor = 8).select("k", "v", "name")
-    assert(salted.collect().map(_.toSeq).toSet == plain.collect().map(_.toSeq).toSet)
-    assert(salted.count == 901)
-  }
-
-  test("saltedJoin left join keeps unmatched skewed rows") {
-    val fact = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-    val dim = Seq((1L, "x")).toDF("k", "d")
-    val out = SkewJoin.saltedJoin(fact, dim, "k", factor = 4, joinType = "left")
-    assert(out.count == 2)
-    assert(out.filter(col("d").isNull).count == 1)
-  }
 
   test("rollup / cube / pivot over accumulated aggs") {
     val df = Gds(Seq(("a", "x", 1), ("a", "y", 2), ("b", "x", 4)).toDF("g1", "g2", "v"))

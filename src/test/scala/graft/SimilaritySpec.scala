@@ -636,6 +636,8 @@ class SimilaritySpec extends SparkSpec {
     assert(newFlat.nonEmpty, "rebuild_due store must rebuild")
     val rebuilt = Similarity.ivfMaintenanceDecision(spark, path, "embedding").collect()(0)
     assert(!rebuilt.getAs[Boolean]("drift_due"), rebuilt.getAs[String]("reason"))
+    // NaN = no `_driftbase` snapshot: the build's concurrent writes lost it
+    assert(!rebuilt.getAs[Double]("centroid_cosine").isNaN, rebuilt.getAs[String]("reason"))
     assert(rebuilt.getAs[Long]("n_vectors") == 80L)
     // healthy store: rebuildIfNeeded is a no-op
     assert(Similarity.rebuildIvfIfNeeded(spark, path, "vec_id", "embedding",

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * so suites don't pay repeated startup. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession =
-    GraftSession.builder(master = "local[4]", shufflePartitions = 4).getOrCreate()
+    GraftSession.builder(cores = 4).getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
 

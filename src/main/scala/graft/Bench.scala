@@ -80,14 +80,16 @@ object Bench {
 
   /** Flat "name":number pairs from a prior BENCH.json — enough to look
     * up per-query reference medians (query names are unique across the
-    * file's maps; non-query keys never collide with query names). */
+    * file's maps; non-query keys never collide with query names). A
+    * missing or unreadable file means no reference medians; any other
+    * failure propagates. */
   private def refTimes(path: String): Map[String, Double] =
     try {
       val txt = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
       "\"([A-Za-z0-9_]+)\":([0-9]+\\.[0-9]+)".r.findAllMatchIn(txt)
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case _: Throwable => Map.empty }
+    } catch { case _: java.io.IOException => Map.empty }
 
   def main(args: Array[String]): Unit = {
     // ambient load BEFORE any Spark work: "start" is read after the

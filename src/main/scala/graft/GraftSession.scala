@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.types.StructType
 
 /** Session factory with scale-sane defaults.
   *
@@ -77,9 +79,18 @@ object GraftSession {
   def getOrCreate(): SparkSession = builder().getOrCreate()
 }
 
-/** Loaders for the test corpus tables (TESTDATA.md). Plain
-  * `spark.read.parquet` relations so Catalyst pushes filters and
-  * prunes columns down to the scan.
+/** Loaders for the test corpus tables (TESTDATA.md). Every call
+  * returns a fresh `spark.read.parquet` relation (its own attribute ids
+  * and its own file index, so a self-join of two reads resolves), and
+  * Catalyst pushes filters and prunes columns down to the scan.
+  *
+  * Each table's schema is inferred once per (session, path): parquet
+  * inference launches a footer-reading Spark job, so later reads pass
+  * the stored schema back (`spark.read.schema(s)`), which starts none.
+  * The entry is kept with the table's file listing (path, length and
+  * modification time of every leaf file); a read whose relation lists
+  * anything different infers again and replaces the entry, so a table
+  * rewritten in place is never read with a stale schema.
   */
 object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier", "part",
@@ -87,7 +98,37 @@ object Tables {
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else read(spark, s"$dir/$name.parquet")
+  }
+
+  /** A path's inferred schema and the file listing it was inferred from. */
+  private case class Inferred(schema: StructType, listing: Set[(String, Long, Long)])
+  private val schemaCache =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Inferred]
+
+  /** The listing the relation's file index already holds: no second
+    * listing of the path. */
+  private def listing(df: DataFrame): Set[(String, Long, Long)] =
+    df.queryExecution.analyzed match {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
+        r.location.listFiles(Nil, Nil).flatMap(_.files).map { f =>
+          val st = f.fileStatus
+          (st.getPath.toString, st.getLen, st.getModificationTime)
+        }.toSet
+    }
+
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    sweepStopped(schemaCache)
+    val key = (spark, path)
+    val cached = schemaCache.get(key).flatMap { e =>
+      val df = spark.read.schema(e.schema).parquet(path)
+      if (listing(df) == e.listing) Some(df) else None
+    }
+    cached.getOrElse {
+      val df = spark.read.parquet(path)
+      schemaCache.put(key, Inferred(df.schema, listing(df)))
+      df
+    }
   }
 
   /** The events table's `ts` physical type has varied across corpus
@@ -100,7 +141,7 @@ object Tables {
     * with identical downstream semantics. */
   private def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/events.parquet")
+    val df = read(spark, s"$dir/events.parquet")
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     df.schema("ts").dataType match {
@@ -128,11 +169,12 @@ object Tables {
   private val purchaseCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
-  /** The sealed-base caches are JVM-global; without eviction an entry
-    * for a stopped session pins its DataFrame/plan objects for the
-    * process lifetime (a slow leak in long-lived processes that create
-    * many sessions — test runs). Swept on every access: entries whose
-    * owning session has stopped are dropped before lookup. */
+  /** The session-keyed caches (schemas and sealed bases) are
+    * JVM-global; without eviction an entry for a stopped session pins
+    * its session and plan objects for the process lifetime (a slow
+    * leak in long-lived processes that create many sessions — test
+    * runs). Swept on every access: entries whose owning session has
+    * stopped are dropped before lookup. */
   private def sweepStopped[V](m: scala.collection.concurrent.TrieMap[(SparkSession, String), V]): Unit =
     m.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
 

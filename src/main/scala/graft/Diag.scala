@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
   SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -12,7 +13,8 @@ import scala.collection.mutable
   * no query names a subcommand covers every gate and prod query.
   *
   *   time    <sfDir> [query...] — median of `SPARK_GRAFT_PASSES` measured
-  *                                passes after one warm-up (Bench's loop)
+  *                                passes after one warm-up (Bench's loop),
+  *                                and the classes compiled over them
   *   plan    <sfDir> [query...] — formatted explain: pushed filters, read
   *                                schemas, join strategies
   *   metrics <sfDir> [query...] — the final adaptive plan with per-node SQL
@@ -58,9 +60,14 @@ object Diag {
   private def time(spark: SparkSession, sfDir: String, name: String,
                    q: (SparkSession, String) => DataFrame): String = {
     val n = warm(spark, sfDir, q)
+    // after the warm-up every generated class should be a cache hit: a
+    // non-zero count is recompilation (eviction, a fresh class loader)
+    // or an AQE plan variant the warm-up run did not take
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val (times, err) = Bench.timePasses(spark, name, sfDir, Bench.passes)
     err.foreach(throw _)
-    f"$name%-28s median ${Bench.median(times)}%8.3f s  n=$n"
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    f"$name%-28s median ${Bench.median(times)}%8.3f s  n=$n  compiles=$compiles"
   }
 
   private def metrics(spark: SparkSession, sfDir: String, name: String,

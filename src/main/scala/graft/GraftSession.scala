@@ -10,7 +10,17 @@ import org.apache.spark.sql.types.StructType
   * (reference: eel-core/src/main/scala/io/eels/Source.scala:24) but on
   * Spark: AQE on (runtime re-plan, skew-join splitting), shuffle
   * partitions sized to the machine rather than the 200 default, UTC so
-  * timestamp results are oracle-comparable.
+  * timestamp results are oracle-comparable, and a codegen cache that
+  * compiles each generated class once per JVM (a cache that holds
+  * graft's whole working set, one executor class loader for every
+  * session, streaming clones included, and class names that do not
+  * depend on AQE's stage numbering).
+  *
+  * `spark.sql.codegen.cache.maxEntries` is a STATIC conf: Spark sizes
+  * the cache when the JVM first generates code, so the value here only
+  * takes effect if this builder creates the JVM's first session before
+  * any codegen ran. `getOrCreate` on an already-running session ignores
+  * it (as it does every static conf).
   */
 object GraftSession {
 
@@ -73,6 +83,26 @@ object GraftSession {
       // materializing candidate-pair relations before their verify
       // joins; see Dedup.minhashPairs.)
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "134217728")
+      // Spark's codegen cache is an LRU of (class loader, generated
+      // code) → compiled class, capped at 100 entries by default. The
+      // eight TPC-H gates alone take ~130 entries, so a mixed workload
+      // evicted what its next query needed and recompiled (~15 ms a
+      // class) every time; one pass over the 199 gates at sf0.01
+      // takes 2178 entries. 4096 holds the whole gate suite.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // Artifact isolation (default on) gives every session — and the
+      // cloned session each Structured Streaming query runs in — its
+      // own executor class loader, and the codegen cache keys on that
+      // loader: every corpusStream start recompiled every executor-side
+      // class. It only isolates per-session jars/files added through
+      // Spark Connect (addArtifact); graft adds none.
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // The whole-stage class name carries the codegen stage id, which
+      // AQE assigns in the order query stages get planned — it varies
+      // between runs of one query, so identical code missed the cache
+      // under a new name (corpus_stream at sf0.001: 0-16 recompiles a
+      // pass, then 0 without the id). Same code, one entry.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false"))
 

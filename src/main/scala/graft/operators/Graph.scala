@@ -161,9 +161,12 @@ object Graph {
       ranks = nodes.join(contrib, col("node") === col("__dst"), "left_outer")
         .select(carry :+
           (teleportExpr + expr("17 * coalesce(__s, 0L) div 20")).as("__r"): _*)
-      // bound analyzer/codegen cost for long runs (lineage is linear
-      // now, so this is plan-SIZE hygiene, not a recompute guard);
-      // short runs skip the (blocking) checkpoint barrier entirely
+      // bound planning cost for long runs (lineage is linear now, so
+      // this is plan-SIZE hygiene, not a recompute guard); short runs
+      // skip the (blocking) checkpoint barrier entirely. Every 5th, not
+      // every 10th: a 20-iteration sf0.1 run took 5.26 s vs 6.25 s
+      // (median of 3, 4 cores, generated classes already cached), so
+      // planning a longer unsealed plan costs more than the extra barrier
       if (i % 5 == 0 && i < iters) ranks = ranks.localCheckpoint()
     }
     // materialize the final ranks (node-count rows — cheap) so the

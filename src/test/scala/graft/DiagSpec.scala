@@ -27,7 +27,15 @@ class DiagSpec extends SparkSpec {
   test("time prints a median per query") {
     val out = diag("time")
     queries.foreach(q => assert(out.linesIterator.exists(l =>
-      l.startsWith(q) && l.matches(".* median +\\d+\\.\\d{3} s  n=\\d+")), out))
+      l.startsWith(q) && l.matches(".* median +\\d+\\.\\d{3} s  n=\\d+  compiles=\\d+")), out))
+  }
+
+  test("time recompiles nothing when every pass restarts a stream") {
+    // each corpus_stream pass starts a new streaming query in a cloned
+    // session; with one executor class loader for every session its
+    // generated classes stay cache hits after the warm-up
+    val out = diag("time", Seq("corpus_stream"))
+    assert(out.matches("corpus_stream .* compiles=0"), out)
   }
 
   test("audit returns a PLANS.md table row per query") {

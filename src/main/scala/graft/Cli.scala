@@ -104,7 +104,7 @@ object Cli {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     println(run(spark, args.toIndexedSeq))
     spark.stop()

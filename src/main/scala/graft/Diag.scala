@@ -103,11 +103,13 @@ object Diag {
   /** Per-stage task duration and metrics from a listener: (tasks,
     * median ms, max ms, max/median, Σcpu, Σgc, spill, shuffle bytes),
     * then the stage's call site and its `spark.job.description` (the
-    * operator label, e.g. a graph round). SKEW flags a stage whose
-    * straggler holds it above 2× the median — a hot shuffle key the
-    * operator's skew defense missed. Stages under 200 ms total or with
-    * fewer than 4 tasks are noise. Σcpu ≪ Σwall with large spill or
-    * shuffle bytes means I/O-bound; large Σgc, allocation pressure. */
+    * operator label, e.g. a graph round; a multi-line one, such as a
+    * streaming batch's id/runId/batch, on one line). SKEW flags a
+    * stage whose straggler holds it above 2× the median — a hot
+    * shuffle key the operator's skew defense missed. Stages under
+    * 200 ms total or with fewer than 4 tasks are noise. Σcpu ≪ Σwall
+    * with large spill or shuffle bytes means I/O-bound; large Σgc,
+    * allocation pressure. */
   private def stages(spark: SparkSession, sfDir: String, name: String,
                      q: (SparkSession, String) => DataFrame): String = {
     val n = warm(spark, sfDir, q)
@@ -116,7 +118,7 @@ object Diag {
       private def stage(id: Int) = byStage.getOrElseUpdate(id, new StageStats)
       override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = synchronized {
         Option(s.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .foreach(stage(s.stageInfo.stageId).description = _)
+          .foreach(d => stage(s.stageInfo.stageId).description = d.linesIterator.mkString(" "))
       }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
         val st = stage(t.stageId)

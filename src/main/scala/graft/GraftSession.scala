@@ -38,7 +38,7 @@ object GraftSession {
       }
   }
 
-  /** Core count for the command-line mains (Bench, Verify, Diag):
+  /** Core count for the command-line mains (Bench, Verify, Diag, Cli):
     * `SPARK_GRAFT_CPUS`, else every available processor. */
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors())
@@ -105,8 +105,6 @@ object GraftSession {
       .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false"))
-
-  def getOrCreate(): SparkSession = builder().getOrCreate()
 }
 
 /** Loaders for the test corpus tables (TESTDATA.md). Every call

@@ -8,34 +8,28 @@ import org.apache.spark.sql.SparkSession
   * read table, rewrite with target parallelism, delete originals).
   *
   * Spark-first: read the directory, `repartition(targetFileCount)`,
-  * write to a sibling temp dir, then swap via two renames — the
-  * original data is never deleted until the compacted copy is in
-  * place (a crash mid-swap leaves either the original or both, never
-  * neither; rename is atomic per directory on HDFS-like filesystems
-  * but the two-step swap as a whole is not). The long-tail of tiny
-  * files is THE chronic 100 TB ingest problem — compaction keeps scan
-  * task counts sane and parquet row groups full. Returns the original
-  * file count. */
+  * write to a sibling temp dir, then swap it in with
+  * [[StoreProtocol.swap]] — the original data is never deleted until
+  * the compacted copy is in place. A crash between the swap's two
+  * renames leaves the original only under its aside name; the next
+  * compaction's entry [[StoreProtocol.repairSwap]] restores it before
+  * anything reads `path`. The long-tail of tiny files is THE chronic
+  * 100 TB ingest problem — compaction keeps scan task counts sane and
+  * parquet row groups full. Returns the original file count. */
 object Compact {
 
   def compactTo(spark: SparkSession, path: String, targetFileCount: Int,
                 format: String = "parquet"): Int = {
     val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    StoreProtocol.repairSwap(fs, hPath)
     val originals = fs.listStatus(hPath).filterNot(_.getPath.getName.startsWith("_"))
     val tmp = new Path(hPath.getParent, hPath.getName + "__compacting")
     fs.delete(tmp, true)
     spark.read.format(format).load(path)
       .repartition(targetFileCount)
       .write.format(format).save(tmp.toString)
-    val old = new Path(hPath.getParent, hPath.getName + "__precompact")
-    fs.delete(old, true)
-    require(fs.rename(hPath, old), s"compaction: could not set aside original $path")
-    if (!fs.rename(tmp, hPath)) {
-      fs.rename(old, hPath) // restore the original before failing
-      throw new IllegalStateException(s"compaction swap failed for $path; original restored")
-    }
-    fs.delete(old, true)
+    StoreProtocol.swap(fs, hPath, tmp)
     originals.length
   }
 
@@ -58,6 +52,7 @@ object Compact {
     require(targetFileSizeBytes > 0, "targetFileSizeBytes must be positive")
     val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    StoreProtocol.repairSwap(fs, hPath)
     val dataFiles = fs.listStatus(hPath).filterNot(_.getPath.getName.startsWith("_"))
     // Flat-directory contract: a partitioned tree (subdirs only) would
     // measure ~0 bytes and silently flatten everything into one file —

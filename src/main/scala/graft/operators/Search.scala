@@ -279,8 +279,8 @@ object Search {
     Seq("deleted", "_commits", "_staging").foreach(d =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/$d"), true))
     StoreProtocol.clearLedger(fs, path) // replay protection resets with _commits
-    Seq("postings", "positions", "docs", "stats").foreach { rel =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/${rel}__old"), true)
+    storeRels.foreach { rel =>
+      fs.delete(StoreProtocol.aside(new org.apache.hadoop.fs.Path(s"$path/$rel")), true)
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/${rel}__staging"), true)
     }
   }
@@ -295,7 +295,8 @@ object Search {
       if (!fs.exists(new org.apache.hadoop.fs.Path(p))) None
       else scala.util.Try(
         spark.read.parquet(p).collect()(0).getAs[Long]("epoch")).toOption
-    epochAt(s"$path/stats").orElse(epochAt(s"$path/stats__old")).getOrElse(-1L)
+    val stats = new org.apache.hadoop.fs.Path(s"$path/stats")
+    epochAt(stats.toString).orElse(epochAt(StoreProtocol.aside(stats).toString)).getOrElse(-1L)
   }
 
   /** One row per token occurrence (idCol, __pos, term, __bucket) —
@@ -394,8 +395,8 @@ object Search {
     // its swap-in (stats missing, stats__old present): without this a
     // pure-streaming store would hard-fail at statsRow on EVERY
     // subsequent append until an operator manually re-ran compact —
-    // repairSwaps is idempotent, matching compactPostingsIndex's entry
-    repairSwaps(fs, path, Seq("postings", "positions", "docs", "stats"))
+    // the repair is idempotent, matching compactPostingsIndex's entry
+    repairStoreSwaps(fs, path)
     // bound the marker set on the path append-only stores actually
     // take (compact alone would never run for them); retention slack
     // keeps every recently-redeliverable batch protected, and the
@@ -470,7 +471,8 @@ object Search {
       "move-docs" -> (() => StoreProtocol.moveStagedFiles(fs,
         new org.apache.hadoop.fs.Path(s"$stage/docs"),
         new org.apache.hadoop.fs.Path(s"$path/docs"), batchId)),
-    ) ++ swapSteps(fs, path, "stats", staging = s"$stage/stats") ++ Seq(
+    ) ++ StoreProtocol.swapSteps(fs, new org.apache.hadoop.fs.Path(s"$path/stats"),
+      new org.apache.hadoop.fs.Path(s"$stage/stats"), "stats") ++ Seq(
       "mark-commit" -> (() => StoreProtocol.markCommitted(fs, path, batchId,
         Some(StoreProtocol.contentFingerprint(delta.select(col(idCol), col(textCol)))))),
       "clean-staging" -> (() => { fs.delete(new org.apache.hadoop.fs.Path(stage), true); () }),
@@ -491,11 +493,11 @@ object Search {
       if (StoreProtocol.isCommitted(fs, path, batchId)) {
         fs.delete(StoreProtocol.stagingDir(path, batchId), true)
       } else {
-        // a stats __old aside means the crashed batch reached its
+        // a stats aside copy means the crashed batch reached its
         // stats swap — the live row may already include the batch
-        val statsSwapBegun =
-          fs.exists(new org.apache.hadoop.fs.Path(s"$path/stats__old"))
-        repairSwaps(fs, path, Seq("stats"))
+        val stats = new org.apache.hadoop.fs.Path(s"$path/stats")
+        val statsSwapBegun = fs.exists(StoreProtocol.aside(stats))
+        StoreProtocol.repairSwap(fs, stats)
         val touched = Seq("positions", "postings", "docs").map { rel =>
           StoreProtocol.deleteBatchFiles(fs,
             new org.apache.hadoop.fs.Path(s"$path/$rel"), batchId)
@@ -506,7 +508,7 @@ object Search {
               st.getAs[Int]("n_buckets"), st.getAs[Long]("epoch"))
             .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(s"$path/stats__staging")
-          swapSteps(fs, path, "stats").foreach(_._2())
+          StoreProtocol.swap(fs, stats, new org.apache.hadoop.fs.Path(s"$path/stats__staging"))
         }
         fs.delete(StoreProtocol.stagingDir(path, batchId), true)
       }
@@ -540,7 +542,7 @@ object Search {
     repairAppends(spark, path)
     // same entry self-heal as append: a compact crashed mid-swap must
     // not hard-fail the statsRow read below until a manual re-compact
-    repairSwaps(fsOf(spark, path), path, Seq("postings", "positions", "docs", "stats"))
+    repairStoreSwaps(fsOf(spark, path), path)
     val epoch = statsRow(spark, path).getAs[Long]("epoch")
     val dels = broadcast(deleteIds.select(col(idCol)).distinct())
     val existing = currentTombstones(spark, path, epoch)
@@ -588,59 +590,15 @@ object Search {
                                 path: String, epoch: Long): Option[DataFrame] =
     tombstones(spark, path).map(_.filter(col("__epoch") === epoch))
 
-  /** Preserve-then-replace directory swap as named steps: the live
-    * dir is renamed aside (never deleted first — a crash can then
-    * always be repaired from `<name>__old`), staging renamed in, the
-    * old copy dropped last. Rename failures throw instead of silently
-    * leaving a half-swapped store. The aside step SELF-REPAIRS any
-    * leftover `__old` (live present → a completed prior swap's
-    * leftover, dropped; live missing → a crashed prior swap, restored
-    * first), so the invariant "swapping never destroys the only copy"
-    * is structural, not dependent on a prior [[repairSwaps]] call. */
-  private def swapSteps(fs: org.apache.hadoop.fs.FileSystem, base: String,
-                        name: String, staging: String = ""): Seq[(String, () => Unit)] = {
-    val live = new org.apache.hadoop.fs.Path(s"$base/$name")
-    val old = new org.apache.hadoop.fs.Path(s"$base/${name}__old")
-    val stagingPath = new org.apache.hadoop.fs.Path(
-      if (staging.isEmpty) s"$base/${name}__staging" else staging)
-    Seq(
-      s"$name-aside" -> { () =>
-        if (fs.exists(old)) {
-          if (fs.exists(live)) { fs.delete(old, true); () }
-          else if (!fs.rename(old, live))
-            throw new java.io.IOException(s"swap: restore $old -> $live failed")
-        }
-        if (fs.exists(live) && !fs.rename(live, old))
-          throw new java.io.IOException(s"swap: rename $live -> $old failed")
-      },
-      s"$name-swap-in" -> { () =>
-        if (!fs.rename(stagingPath, live)) {
-          if (fs.exists(old)) fs.rename(old, live) // best-effort restore
-          throw new java.io.IOException(s"swap: rename $stagingPath -> $live failed")
-        }
-      },
-      s"$name-drop-old" -> { () =>
-        if (fs.exists(old)) { fs.delete(old, true); () }
-      },
-    )
-  }
+  /** The four swapped relations of a postings store, stats last. */
+  private val storeRels = Seq("postings", "positions", "docs", "stats")
 
-  /** Roll half-finished swaps back to a readable state: a live dir
-    * missing with its `__old` present means a crash hit between the
-    * two renames — restore the old copy (the rewrite is recomputed
-    * from data, so rolling back never loses the compaction, only
-    * defers it); an `__old` next to a live dir is a completed swap's
-    * leftover — drop it. */
-  private def repairSwaps(fs: org.apache.hadoop.fs.FileSystem, base: String,
-                          names: Seq[String]): Unit =
-    names.foreach { name =>
-      val live = new org.apache.hadoop.fs.Path(s"$base/$name")
-      val old = new org.apache.hadoop.fs.Path(s"$base/${name}__old")
-      if (fs.exists(old)) {
-        if (!fs.exists(live)) { fs.rename(old, live); () }
-        else { fs.delete(old, true); () }
-      }
-    }
+  /** Roll every half-swapped relation back to a readable state (see
+    * [[StoreProtocol.repairSwap]]) — the entry repair of append,
+    * delete and compact. */
+  private def repairStoreSwaps(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit =
+    storeRels.foreach(rel =>
+      StoreProtocol.repairSwap(fs, new org.apache.hadoop.fs.Path(s"$path/$rel")))
 
   /** Fold tombstones into the postings physically — the merge half of
     * the delete design: postings/positions/docs rewritten minus the
@@ -666,7 +624,7 @@ object Search {
   def compactPostingsIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     val fs = fsOf(spark, path)
     repairAppends(spark, path)
-    repairSwaps(fs, path, Seq("postings", "positions", "docs", "stats"))
+    repairStoreSwaps(fs, path)
     if (tombstones(spark, path).isDefined) {
       val steps = compactPostingsSteps(spark, path)
       // guide §2.6: the three anti-join staging rewrites read disjoint
@@ -723,8 +681,9 @@ object Search {
         statsFromDocLens(spark.read.parquet(s"$path/docs__staging"), nBuckets, epoch + 1)
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$path/stats__staging")),
-    ) ++ swapSteps(fs, path, "postings") ++ swapSteps(fs, path, "positions") ++
-      swapSteps(fs, path, "docs") ++ swapSteps(fs, path, "stats") :+
+    ) ++ storeRels.flatMap(rel => StoreProtocol.swapSteps(fs,
+      new org.apache.hadoop.fs.Path(s"$path/$rel"),
+      new org.apache.hadoop.fs.Path(s"$path/${rel}__staging"), rel)) :+
       ("clear-tombstones" -> (() => {
         fs.delete(new org.apache.hadoop.fs.Path(s"$path/deleted"), true)
         // stop-the-world window: also bound the commit-marker set
@@ -769,10 +728,10 @@ object Search {
   def postingsStoreStats(spark: org.apache.spark.sql.SparkSession,
                          path: String): DataFrame = {
     val fs = fsOf(spark, path)
+    val stats = new org.apache.hadoop.fs.Path(s"$path/stats")
     val st =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/stats")) &&
-          fs.exists(new org.apache.hadoop.fs.Path(s"$path/stats__old")))
-        spark.read.parquet(s"$path/stats__old").collect()(0)
+      if (!fs.exists(stats) && fs.exists(StoreProtocol.aside(stats)))
+        spark.read.parquet(StoreProtocol.aside(stats).toString).collect()(0)
       else statsRow(spark, path)
     val epoch = st.getAs[Long]("epoch")
     val (nDel, tokDel) = currentTombstones(spark, path, epoch).fold((0L, 0L)) { t =>

@@ -431,8 +431,8 @@ object Similarity {
     val livePath = new org.apache.hadoop.fs.Path(path)
     val pendingRebuild = fs.exists(new org.apache.hadoop.fs.Path(path + "__rebuild"))
     val base =
-      if (!fs.exists(livePath) && fs.exists(new org.apache.hadoop.fs.Path(path + "__old")))
-        new org.apache.hadoop.fs.Path(path + "__old")
+      if (!fs.exists(livePath) && fs.exists(StoreProtocol.aside(livePath)))
+        StoreProtocol.aside(livePath)
       else livePath
     val statsRoot = base.toString
     val cellDirs = fs.listStatus(base).filter(_.getPath.getName.startsWith("__cell="))
@@ -847,9 +847,10 @@ object Similarity {
     val fs = StoreProtocol.fsOf(spark, path)
     // a rebuild crash between aside and swap-in leaves the live root
     // absent — decide over the preserved `__old` copy (identical data)
+    val livePath = new org.apache.hadoop.fs.Path(path)
     val root =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path)) &&
-          fs.exists(new org.apache.hadoop.fs.Path(path + "__old"))) path + "__old"
+      if (!fs.exists(livePath) && fs.exists(StoreProtocol.aside(livePath)))
+        StoreProtocol.aside(livePath).toString
       else path
     val cellsRel = if (pq) s"$root/codes" else root
     val vecsRel = if (pq) s"$root/vectors" else root
@@ -957,7 +958,6 @@ object Similarity {
     val fs = StoreProtocol.fsOf(spark, path)
     val base = new org.apache.hadoop.fs.Path(path)
     val rebuild = new org.apache.hadoop.fs.Path(path + "__rebuild")
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
     val corpus = liveCellRead(spark, fs, path)
       .getOrElse(throw new java.io.IOException(s"ivf rebuild: no live cells under $path"))
       .drop("__cell")
@@ -981,19 +981,8 @@ object Similarity {
         }
       }),
       "mark-ready" -> (() => fs.create(new org.apache.hadoop.fs.Path(rebuild, "_ready"), true).close()),
-      "swap-aside" -> (() => {
-        if (!fs.rename(base, old))
-          throw new java.io.IOException(s"ivf rebuild: rename $base -> $old failed")
-      }),
-      "swap-in" -> (() => {
-        if (!fs.rename(rebuild, base)) {
-          fs.rename(old, base) // best-effort restore
-          throw new java.io.IOException(s"ivf rebuild: rename $rebuild -> $base failed")
-        }
-      }),
-      "drop-ready" -> (() => { fs.delete(new org.apache.hadoop.fs.Path(base, "_ready"), false); () }),
-      "drop-old" -> (() => { fs.delete(old, true); () }),
-    )
+    ) ++ StoreProtocol.swapSteps(fs, base, rebuild, "root") :+
+      ("drop-ready" -> (() => { fs.delete(new org.apache.hadoop.fs.Path(base, "_ready"), false); () }))
     (flat, steps)
   }
 
@@ -1007,22 +996,13 @@ object Similarity {
                                       path: String): Unit = {
     val base = new org.apache.hadoop.fs.Path(path)
     val rebuild = new org.apache.hadoop.fs.Path(path + "__rebuild")
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    if (fs.exists(rebuild)) {
-      if (!fs.exists(base) && fs.exists(new org.apache.hadoop.fs.Path(rebuild, "_ready"))) {
-        if (!fs.rename(rebuild, base))
-          throw new java.io.IOException(s"ivf rebuild repair: rename $rebuild -> $base failed")
-        fs.delete(old, true)
-      } else {
-        if (!fs.exists(base) && fs.exists(old) && !fs.rename(old, base))
-          throw new java.io.IOException(s"ivf rebuild repair: rename $old -> $base failed")
-        fs.delete(rebuild, true)
-      }
-    } else if (fs.exists(old)) {
-      if (!fs.exists(base)) {
-        if (!fs.rename(old, base))
-          throw new java.io.IOException(s"ivf rebuild repair: rename $old -> $base failed")
-      } else { fs.delete(old, true); () }
+    if (!fs.exists(base) && fs.exists(new org.apache.hadoop.fs.Path(rebuild, "_ready"))) {
+      if (!fs.rename(rebuild, base))
+        throw new java.io.IOException(s"ivf rebuild repair: rename $rebuild -> $base failed")
+      fs.delete(StoreProtocol.aside(base), true)
+    } else {
+      StoreProtocol.repairSwap(fs, base)
+      fs.delete(rebuild, true)
     }
     if (fs.exists(base)) { fs.delete(new org.apache.hadoop.fs.Path(base, "_ready"), false); () }
   }

@@ -4,7 +4,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Shared filesystem protocol for the persisted stores (the postings
   * index in [[Search]] and the IVF index in [[Similarity]]): staged
-  * batch appends that are CRASH-RETRY-SAFE.
+  * batch appends that are CRASH-RETRY-SAFE, and the one preserve-aside
+  * directory swap ([[swapSteps]] / [[repairSwap]]) that every store,
+  * table and export replaces a live copy with — all but the IVF
+  * per-cell delete, whose absent staging cell means "drop".
   *
   * The problem both appends share: a bare parquet `Append` re-run
   * after a crash duplicates the delta's rows (double tf/df in the
@@ -42,6 +45,64 @@ private[graft] object StoreProtocol {
 
   def fsOf(spark: org.apache.spark.sql.SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  // ---------------------------------------------------------------
+  // The preserve-aside swap. A rewrite lands in a staging dir (or
+  // file), then: rename live aside to `<live>__old`, rename staging
+  // in, drop the aside copy. Live is never deleted before its
+  // replacement is in place, so a crash between the two renames
+  // leaves the old copy under its aside name; `repairSwap` puts it
+  // back. Callers repair BEFORE they read live — a reader that took
+  // the missing live copy for "no table yet" would rebuild from
+  // nothing, and the next swap's repair would then drop the only
+  // copy of the old data as a completed swap's leftover.
+  // ---------------------------------------------------------------
+
+  /** The path a swap sets `live` aside to while its replacement moves in. */
+  def aside(live: Path): Path = live.suffix("__old")
+
+  private def rename(fs: FileSystem, src: Path, dst: Path): Unit =
+    if (!fs.rename(src, dst)) throw new java.io.IOException(s"swap: rename $src -> $dst failed")
+
+  /** Roll a torn swap back to a readable state: live missing with its
+    * aside copy present means a crash hit between the two renames —
+    * restore the aside copy (every caller recomputes its rewrite from
+    * data, so rolling back only defers it); an aside copy next to a
+    * live one is a completed swap's leftover — drop it. A rename that
+    * returns false throws. */
+  def repairSwap(fs: FileSystem, live: Path): Unit = {
+    val old = aside(live)
+    if (fs.exists(old)) {
+      if (fs.exists(live)) { fs.delete(old, true); () }
+      else rename(fs, old, live)
+    }
+  }
+
+  /** The swap of `staging` into `live` as named steps (`<name>-aside`,
+    * `<name>-swap-in`, `<name>-drop-old`), so crash specs can kill it
+    * at every boundary. The aside step runs [[repairSwap]] first, so
+    * a swap never sets aside over the only copy of a torn prior one. */
+  def swapSteps(fs: FileSystem, live: Path, staging: Path,
+                name: String): Seq[(String, () => Unit)] = {
+    val old = aside(live)
+    Seq(
+      s"$name-aside" -> { () =>
+        repairSwap(fs, live)
+        if (fs.exists(live)) rename(fs, live, old)
+      },
+      s"$name-swap-in" -> { () =>
+        if (!fs.rename(staging, live)) {
+          repairSwap(fs, live) // put the old copy back before failing
+          throw new java.io.IOException(s"swap: rename $staging -> $live failed")
+        }
+      },
+      s"$name-drop-old" -> { () => fs.delete(old, true); () },
+    )
+  }
+
+  /** All of [[swapSteps]] in one call. */
+  def swap(fs: FileSystem, live: Path, staging: Path): Unit =
+    swapSteps(fs, live, staging, live.getName).foreach(_._2())
 
   /** `-` terminates the file prefix (`b<batchId>-`), so a batch id
     * containing it could alias another batch's files; bare `.`/`..`
@@ -119,7 +180,6 @@ private[graft] object StoreProtocol {
   // ---------------------------------------------------------------
 
   private def ledgerPath(path: String) = new Path(s"$path/_applied")
-  private def ledgerOldPath(path: String) = new Path(s"$path/_applied__old")
   private def ledgerTmpPath(path: String) = new Path(s"$path/_applied__tmp")
 
   /** A batch id parsed as the streaming sequence number it is, when it
@@ -187,26 +247,22 @@ private[graft] object StoreProtocol {
             "read replay history; restore it (or rebuild the store) before appending")
         parsed.toOption
       }
-    readAt(ledgerPath(path)).orElse(readAt(ledgerOldPath(path))).getOrElse((-1L, Set.empty[String]))
+    readAt(ledgerPath(path)).orElse(readAt(aside(ledgerPath(path))))
+      .getOrElse((-1L, Set.empty[String]))
   }
 
   /** Persist every live marker's batch id into the ledger (idempotent;
     * skips the write when nothing is new). Runs at the top of
     * [[pruneCommitMarkers]] — the invariant is "no marker is ever
-    * pruned whose id the ledger does not hold". The write is a
-    * preserve-aside swap (tmp → aside live → rename in → drop old),
-    * self-repairing any torn prior swap first, so a crash at any point
-    * leaves a readable ledger whose union with the (unpruned) markers
-    * still covers every applied id. */
+    * pruned whose id the ledger does not hold". The write is the
+    * preserve-aside [[swap]] of a tmp file, with any torn prior swap
+    * repaired first, so a crash at any point leaves a readable ledger
+    * whose union with the (unpruned) markers still covers every
+    * applied id. */
   def foldMarkersIntoLedger(fs: FileSystem, path: String): Unit = {
     val names = listMarkers(fs, path).map(_.getPath.getName)
-    // repair a torn prior swap before reading (live missing + old
-    // present -> restore; both present -> completed swap's leftover)
-    val live = ledgerPath(path); val old = ledgerOldPath(path)
-    if (fs.exists(old)) {
-      if (!fs.exists(live)) { fs.rename(old, live); () }
-      else { fs.delete(old, false); () }
-    }
+    val live = ledgerPath(path)
+    repairSwap(fs, live)
     fs.delete(ledgerTmpPath(path), false)
     if (names.isEmpty && !fs.exists(live)) return
     val (hw, ids) = readLedger(fs, path)
@@ -223,12 +279,7 @@ private[graft] object StoreProtocol {
     try out.write((newHw.toString +: newIds.toSeq.sorted).mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    if (fs.exists(live) && !fs.rename(live, old))
-      throw new java.io.IOException(s"ledger: rename $live -> $old failed")
-    if (!fs.rename(ledgerTmpPath(path), live))
-      throw new java.io.IOException(s"ledger: rename ${ledgerTmpPath(path)} -> $live failed")
-    fs.delete(old, false)
-    ()
+    swap(fs, live, ledgerTmpPath(path))
   }
 
   /** True when the ledger proves `batchId` was committed before — the
@@ -247,7 +298,7 @@ private[graft] object StoreProtocol {
     * maintenance state (`_commits`, `_staging`), deliberately, so a
     * rebuilt store accepts a restarted stream's batch 0. */
   def clearLedger(fs: FileSystem, path: String): Unit =
-    Seq(ledgerPath(path), ledgerOldPath(path), ledgerTmpPath(path))
+    Seq(ledgerPath(path), aside(ledgerPath(path)), ledgerTmpPath(path))
       .foreach(p => fs.delete(p, false))
 
   def stagingDir(path: String, batchId: String): Path =

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.StoreProtocol
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -106,10 +107,13 @@ object StreamOps {
     *
     * Scale shape per batch: one key-shuffle of table ∪ batch (both
     * sides hash-partitioned on `keys` — no global sort; the per-key
-    * window runs over the BATCH only), then a staging write + atomic
-    * directory swap. At 100 TB the table side is a partitioned
-    * columnar store and the same recipe applies per partition; here it
-    * is the honest local form. */
+    * window runs over the BATCH only), then a staging write + the
+    * [[graft.operators.StoreProtocol.swap]] directory swap. Crash-safe:
+    * each batch first repairs a swap torn by a crash, so it merges into
+    * the restored table instead of taking the missing table for an
+    * empty one. At 100 TB the table side is a partitioned columnar
+    * store and the same recipe applies per partition; here it is the
+    * honest local form. */
   def upsertStream(updates: DataFrame, tablePath: String, keys: Seq[String],
                    orderCols: Seq[String], checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] = {
     require(keys.nonEmpty && orderCols.nonEmpty, "keys and orderCols required")
@@ -123,6 +127,7 @@ object StreamOps {
         // s3a:///hdfs:// with a file:// default would otherwise swap
         // against the wrong scheme
         val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        StoreProtocol.repairSwap(fs, tbl)
         val merged =
           if (!fs.exists(tbl)) {
             // first batch: just resolve in-batch duplicates latest-wins
@@ -138,30 +143,10 @@ object StreamOps {
               .upsertLatest(graft.core.Gds(batch.toDF()), keys, orderCols).toDF
         val staging = new org.apache.hadoop.fs.Path(tablePath + "__staging")
         merged.write.mode("overwrite").parquet(staging.toString)
-        atomicSwap(fs, staging, tbl)
+        StoreProtocol.swap(fs, tbl, staging)
         } // empty batch: skip the rewrite entirely (idle-trigger no-op)
         ()
       }
-  }
-
-  /** Crash-safe table swap: the live dir is renamed ASIDE (never
-    * deleted before its replacement is in place) and every rename's
-    * boolean is checked — a false fails the batch so the checkpoint
-    * retries. A crash between the renames leaves tbl__old intact for
-    * recovery, vs delete-then-rename's window with NO table directory
-    * at all. */
-  private def atomicSwap(fs: org.apache.hadoop.fs.FileSystem,
-                         staging: org.apache.hadoop.fs.Path,
-                         tbl: org.apache.hadoop.fs.Path): Unit = {
-    val old = new org.apache.hadoop.fs.Path(tbl.toString + "__old")
-    if (fs.exists(old)) fs.delete(old, true) // leftover from a prior crash
-    if (fs.exists(tbl) && !fs.rename(tbl, old))
-      throw new java.io.IOException(s"atomicSwap: rename $tbl -> $old failed")
-    if (!fs.rename(staging, tbl)) {
-      if (fs.exists(old)) fs.rename(old, tbl) // best-effort restore
-      throw new java.io.IOException(s"atomicSwap: rename $staging -> $tbl failed")
-    }
-    if (fs.exists(old)) fs.delete(old, true)
   }
 
   /** Streaming corpus preparation — the nightly-crawl pipeline as a
@@ -172,8 +157,10 @@ object StreamOps {
     * [[graft.operators.Pipeline.writeCorpusState]]) — quality gate +
     * scrub map-side, exact dedup vs the fingerprint store, near-dup
     * dedup vs the signature store with bridge retraction — and the
-    * refreshed export lands at `stateDir/export` via a crash-safe
-    * swap. Batch ids must be previously unseen and increasing (the
+    * refreshed export lands at `stateDir/export` via the
+    * [[graft.operators.StoreProtocol.swap]] directory swap, which
+    * repairs a swap torn by a crash before it sets the export aside.
+    * Batch ids must be previously unseen and increasing (the
     * incremental contract); on replay the final export equals a full
     * [[graft.operators.Pipeline.prepareCorpus]] rebuild over
     * everything ever crawled (spec-pinned). */
@@ -197,8 +184,7 @@ object StreamOps {
             .getFileSystem(spark.sparkContext.hadoopConfiguration)
           val staging = new org.apache.hadoop.fs.Path(s"$stateDir/export__staging")
           export.write.mode("overwrite").parquet(staging.toString)
-          atomicSwap(fs, staging,
-            new org.apache.hadoop.fs.Path(s"$stateDir/export"))
+          StoreProtocol.swap(fs, new org.apache.hadoop.fs.Path(s"$stateDir/export"), staging)
         }
         ()
       }
@@ -221,7 +207,8 @@ object StreamOps {
     * dependent, which a training mixture cannot be.
     *
     * Crash-safe and replay-idempotent: state and mix land via the
-    * upsertStream swap, and the merge dedupes on id, so a crash-retry
+    * upsertStream swap, each batch repairs a torn `rows` swap before
+    * it reads the state, and the merge dedupes on id, so a crash-retry
     * re-delivering a committed batch is a no-op (ids re-merge to the
     * same rows — stronger than ivfIndexStream's at-least-once).
     * Re-delivered ids are assumed to carry identical (source, tokens)
@@ -239,6 +226,7 @@ object StreamOps {
           val fs = new org.apache.hadoop.fs.Path(stateDir)
             .getFileSystem(spark.sparkContext.hadoopConfiguration)
           val rowsPath = new org.apache.hadoop.fs.Path(s"$stateDir/rows")
+          StoreProtocol.repairSwap(fs, rowsPath)
           val slim = batch.toDF().select(col(idCol), col(stratumCol), col(tokensCol))
           // sealed once (eager localCheckpoint), consumed twice: the
           // state rewrite AND the mix input — re-reading the freshly
@@ -251,12 +239,12 @@ object StreamOps {
               .localCheckpoint(true)
           val staging = new org.apache.hadoop.fs.Path(s"$stateDir/rows__staging")
           merged.write.mode("overwrite").parquet(staging.toString)
-          atomicSwap(fs, staging, rowsPath)
+          StoreProtocol.swap(fs, rowsPath, staging)
           val mix = graft.operators.Pipeline.tokenMixToBudget(
             merged, idCol, stratumCol, tokensCol, budgets, seed)
           val mixStaging = new org.apache.hadoop.fs.Path(s"$stateDir/mix__staging")
           mix.write.mode("overwrite").parquet(mixStaging.toString)
-          atomicSwap(fs, mixStaging, new org.apache.hadoop.fs.Path(s"$stateDir/mix"))
+          StoreProtocol.swap(fs, new org.apache.hadoop.fs.Path(s"$stateDir/mix"), mixStaging)
         }
         ()
       }

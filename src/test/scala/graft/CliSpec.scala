@@ -38,6 +38,18 @@ class CliSpec extends SparkSpec {
     assert(ParquetSource(dir).read(spark).agg(sum(col("n"))).head.getLong(0) == 200L * 201 / 2)
   }
 
+  test("compact restores a directory torn between its swap renames, then compacts every row") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_compact_torn").toString + "/frag"
+    (1 to 200).toDF("n").repartition(20).write.parquet(dir)
+    // the state a crash between the compaction swap's two renames leaves
+    assert(new java.io.File(dir).renameTo(new java.io.File(s"${dir}__old")))
+    assert(Cli.run(spark, Seq("compact", dir, "2")) == "compacted 20 files to 2")
+    assert(new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet")) == 2)
+    assert(ParquetSource(dir).read(spark).agg(count(lit(1)), sum(col("n"))).head.toSeq ==
+      Seq(200L, 200L * 201 / 2))
+    assert(!new java.io.File(s"${dir}__old").exists())
+  }
+
   test("compactToSize targets a byte size per file (RollingParquetWriter byte trigger)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_compactsz").toString + "/frag"
     (1 to 5000).map(i => (i, s"padpadpadpad-$i")).toDF("n", "s")

@@ -24,6 +24,15 @@ class DiagSpec extends SparkSpec {
     assert(stageRows.nonEmpty, out)
   }
 
+  test("stages prints one line per stage when a job description spans lines") {
+    // every corpus_stream stage carries the stream's multi-line
+    // id/runId/batch description
+    val lines = diag("stages", Seq("corpus_stream")).linesIterator.toSeq
+    assert(lines.head.startsWith("=== corpus_stream  wall=") && lines(1).startsWith("stage "))
+    assert(lines.length > 2 && lines.drop(2).forall(_.matches("^\\d+\\s+\\d+\\s.*")),
+      lines.mkString("\n"))
+  }
+
   test("time prints a median per query") {
     val out = diag("time")
     queries.foreach(q => assert(out.linesIterator.exists(l =>

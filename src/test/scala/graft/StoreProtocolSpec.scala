@@ -3,9 +3,9 @@ package graft
 import graft.operators.{Search, Similarity, StoreProtocol}
 import org.apache.hadoop.fs.Path
 
-/** Protocol-level properties added in r15 (VERDICT_r14 advice):
-  * atomic marker writes, the reserved numeric batch-id space, legacy
-  * `stream<N>` ledger migration, and corrupt-marker loudness. */
+/** Protocol-level properties: atomic marker writes, the reserved
+  * numeric batch-id space, legacy `stream<N>` ledger migration,
+  * corrupt-marker loudness, and the shared directory swap. */
 class StoreProtocolSpec extends SparkSpec {
   import spark.implicits._
 
@@ -112,5 +112,57 @@ class StoreProtocolSpec extends SparkSpec {
       StoreProtocol.requireSameReplay(f, p, "b1", (3L, 30L, 40L))
     }
     assert(e.getMessage.contains("DIFFERENT content"))
+  }
+
+  private def writeDir(f: org.apache.hadoop.fs.FileSystem, dir: Path, body: String): Unit = {
+    val out = f.create(new Path(dir, "part"), true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+  }
+
+  private def readDir(f: org.apache.hadoop.fs.FileSystem, dir: Path): String = {
+    val in = f.open(new Path(dir, "part"))
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  test("swap killed at every step boundary repairs to exactly the old or the new copy") {
+    val root = tmpDir("graft_proto_swap")
+    val f = fs(root)
+    val names = StoreProtocol.swapSteps(f, new Path(s"$root/probe"),
+      new Path(s"$root/probe__staging"), "t").map(_._1)
+    assert(names == Seq("t-aside", "t-swap-in", "t-drop-old"))
+    (0 to names.length).foreach { k =>
+      val live = new Path(s"$root/k$k")
+      val staging = new Path(s"$root/k${k}__staging")
+      writeDir(f, live, "old")
+      writeDir(f, staging, "new")
+      StoreProtocol.swapSteps(f, live, staging, "t").take(k).foreach(_._2())
+      StoreProtocol.repairSwap(f, live)
+      // the old copy until the swap-in step ran, the new one after it
+      assert(readDir(f, live) == (if (k >= 2) "new" else "old"), s"crash after $k steps")
+      assert(!f.exists(StoreProtocol.aside(live)), s"crash after $k steps: aside copy left")
+    }
+  }
+
+  test("a swap rename that returns false throws and leaves the old copy live") {
+    val root = tmpDir("graft_proto_swapfail")
+    val f = fs(root)
+    val live = new Path(s"$root/t")
+    val staging = new Path(s"$root/t__staging")
+    writeDir(f, live, "old")
+    writeDir(f, staging, "new")
+    def failing(fails: Path => Boolean) = new org.apache.hadoop.fs.FilterFileSystem(f) {
+      override def rename(src: Path, dst: Path): Boolean = !fails(src) && super.rename(src, dst)
+    }
+    // the aside rename fails: nothing moved
+    intercept[java.io.IOException](StoreProtocol.swap(failing(_ => true), live, staging))
+    assert(readDir(f, live) == "old")
+    // the swap-in rename fails: the aside copy is put back before the throw
+    intercept[java.io.IOException](StoreProtocol.swap(failing(_ == staging), live, staging))
+    assert(readDir(f, live) == "old" && !f.exists(StoreProtocol.aside(live)))
+    // the repair's restore rename fails on a torn swap
+    assert(f.rename(live, StoreProtocol.aside(live)))
+    intercept[java.io.IOException](StoreProtocol.repairSwap(failing(_ => true), live))
+    StoreProtocol.repairSwap(f, live)
+    assert(readDir(f, live) == "old")
   }
 }

@@ -103,6 +103,27 @@ class StreamingSpec extends SparkSpec {
     assert(out2 == out, "checkpoint-loss replay must not change the upsert table")
   }
 
+  test("upsertStream merges into the restored table after a crash between its swap renames") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_upsert_torn").toString
+    val (in, table) = (s"$base/in", s"$base/table")
+    def deliver(rows: Seq[(Long, Long, String)]): Unit = {
+      rows.toDF("k", "ord", "v").coalesce(1).write.mode("append").parquet(in)
+      val q = StreamOps.upsertStream(
+        StreamOps.parquetStream(spark, in, spark.read.parquet(in).schema),
+        table, Seq("k"), Seq("ord"), s"$base/ckpt").start()
+      q.processAllAvailable()
+      q.stop()
+    }
+    deliver(Seq((1L, 1L, "a"), (2L, 1L, "b"), (3L, 1L, "c")))
+    // the state a crash between the swap's two renames leaves
+    assert(new java.io.File(table).renameTo(new java.io.File(s"${table}__old")))
+    deliver(Seq((4L, 10L, "d")))
+    assert(spark.read.parquet(table).as[(Long, Long, String)].collect().toSet ==
+      Set((1L, 1L, "a"), (2L, 1L, "b"), (3L, 1L, "c"), (4L, 10L, "d")))
+    assert(!new java.io.File(s"${table}__old").exists())
+  }
+
   test("corpusStream: replayed crawl batches equal a full prepareCorpus rebuild") {
     import spark.implicits._
     import graft.operators.Pipeline
@@ -236,6 +257,34 @@ class StreamingSpec extends SparkSpec {
     val rows = spark.read.parquet(s"$state/rows")
     assert(rows.count() == 40L && rows.select("doc_id").distinct().count() == 40L,
       "redelivered docs must not duplicate the state relation")
+  }
+
+  test("tokenMixStream keeps every earlier doc after a crash between its rows swap renames") {
+    import spark.implicits._
+    import graft.operators.Pipeline
+    val base = java.nio.file.Files.createTempDirectory("graft_mixstream_torn").toString
+    val (in, state) = (s"$base/in", s"$base/state")
+    val budgets = Seq("a" -> 200L, "b" -> 120L)
+    val b1 = (1L to 20L).map(i => (i, if (i % 2 == 0) "a" else "b", 40L))
+    val b2 = (21L to 40L).map(i => (i, if (i % 2 == 0) "a" else "b", 40L))
+    def deliver(rows: Seq[(Long, String, Long)]): Unit = {
+      rows.toDF("doc_id", "source", "n_tokens").coalesce(1).write.mode("append").parquet(in)
+      val q = StreamOps.tokenMixStream(
+        StreamOps.parquetStream(spark, in, spark.read.parquet(in).schema),
+        state, "doc_id", "source", "n_tokens", budgets, s"$base/ckpt").start()
+      q.processAllAvailable()
+      q.stop()
+    }
+    deliver(b1)
+    // the state a crash between the rows swap's two renames leaves
+    assert(new java.io.File(s"$state/rows").renameTo(new java.io.File(s"$state/rows__old")))
+    deliver(b2)
+    assert(spark.read.parquet(s"$state/rows").select("doc_id").as[Long].collect().sorted.toSeq ==
+      (1L to 40L))
+    assert(spark.read.parquet(s"$state/mix").collect().toSet ==
+      Pipeline.tokenMixToBudget((b1 ++ b2).toDF("doc_id", "source", "n_tokens"),
+        "doc_id", "source", "n_tokens", budgets).collect().toSet)
+    assert(!new java.io.File(s"$state/rows__old").exists())
   }
 
   test("embeddingDriftStream emits per-batch drift equal to batch embeddingDrift on replay") {

@@ -14,7 +14,8 @@ import scala.collection.mutable
   *
   *   time    <sfDir> [query...] — median of `SPARK_GRAFT_PASSES` measured
   *                                passes after one warm-up (Bench's loop),
-  *                                and the classes compiled over them
+  *                                the classes compiled and the Hadoop
+  *                                `Shell` processes forked over them
   *   plan    <sfDir> [query...] — formatted explain: pushed filters, read
   *                                schemas, join strategies
   *   metrics <sfDir> [query...] — the final adaptive plan with per-node SQL
@@ -64,10 +65,34 @@ object Diag {
     // non-zero count is recompilation (eviction, a fresh class loader)
     // or an AQE plan variant the warm-up run did not take
     val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    val (times, err) = Bench.timePasses(spark, name, sfDir, Bench.passes)
+    val ((times, err), forks) = shellForks(Bench.timePasses(spark, name, sfDir, Bench.passes))
     err.foreach(throw _)
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
-    f"$name%-28s median ${Bench.median(times)}%8.3f s  n=$n  compiles=$compiles"
+    f"$name%-28s median ${Bench.median(times)}%8.3f s  n=$n  compiles=$compiles  forks=$forks"
+  }
+
+  /** `f`'s result and the processes forked through Hadoop's
+    * `org.apache.hadoop.util.Shell` while it ran (the local
+    * filesystem's `chmod`/`readlink` without libhadoop), counted from an
+    * in-process JFR recording of `jdk.ProcessStart` with stack traces. */
+  private[graft] def shellForks[T](f: => T): (T, Int) = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    try {
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.start()
+      val out = f
+      rec.stop()
+      val file = java.nio.file.Files.createTempFile("graft-forks", ".jfr")
+      try {
+        rec.dump(file)
+        val forks = jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.count { e =>
+          Option(e.getStackTrace).exists(_.getFrames.asScala.exists(
+            _.getMethod.getType.getName.startsWith("org.apache.hadoop.util.Shell")))
+        }
+        (out, forks)
+      } finally java.nio.file.Files.deleteIfExists(file)
+    } finally rec.close()
   }
 
   private def metrics(spark: SparkSession, sfDir: String, name: String,

@@ -21,6 +21,19 @@ import org.apache.spark.sql.types.StructType
   * takes effect if this builder creates the JVM's first session before
   * any codegen ran. `getOrCreate` on an already-running session ignores
   * it (as it does every static conf).
+  *
+  * The two `fs.*.file.impl` defaults swap in [[graft.sources.LocalFileSystem]]
+  * and [[graft.sources.LocalFs]]: without libhadoop, Hadoop's local
+  * filesystem forks `chmod` for every file, `.crc` file and directory a
+  * store write creates, and `readlink` twice per checkpoint-log rename.
+  * A JFR `jdk.ProcessStart` count of one traced `corpus_ingest` cycle
+  * found 523 such forks (state_write 64, crawl_stream 221, of them 56
+  * readlink, postings_compact 179, ivf_append 59), about 1660 of a
+  * run's ~2450 on executor task threads. The FileSystem cache is
+  * JVM-wide, as the codegen cache is: the class applies only if this
+  * builder's session creates the JVM's first `file:` FileSystem.
+  * (FileContext, which the stream checkpoints use, reads its class
+  * from the configuration on every call.)
   */
 object GraftSession {
 
@@ -103,6 +116,11 @@ object GraftSession {
       // under a new name (corpus_stream at sf0.001: 0-16 recompiles a
       // pass, then 0 without the id). Same code, one entry.
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // Hadoop's local filesystem forks `chmod`/`readlink` per file
+      // without libhadoop (counts in the scaladoc above); graft's twins
+      // do both through java.nio, modes and checksums unchanged.
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.LocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.LocalFs].getName)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false"))
 }

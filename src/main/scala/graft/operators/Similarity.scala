@@ -338,7 +338,7 @@ object Similarity {
     // (the compactPostingsIndex discipline — only the newest streamed
     // batch can ever be redelivered)
     StoreProtocol.pruneCommitMarkers(fs, path)
-    val (touched, steps) = deleteFromIvfSteps(spark, path, deleteIds, idCol)
+    val (touched, steps) = deleteFromIvfSteps(spark, fs, path, deleteIds, idCol)
     steps.foreach(_._2())
     touched.length
   }
@@ -361,7 +361,9 @@ object Similarity {
           // crashed mid-drop of an EMPTIED cell: complete the drop —
           // restoring would resurrect the deleted vectors
           fs.delete(s.getPath, true); ()
-        } else { fs.rename(s.getPath, live); () } // survivor cell: roll back, re-run re-touches
+        } else if (!fs.rename(s.getPath, live)) { // survivor cell: roll back, re-run re-touches
+          throw new java.io.IOException(s"ivf delete repair: rename ${s.getPath} -> $live failed")
+        }
       }
     }
     if (stagingExists) { fs.delete(staging, true); () }
@@ -374,8 +376,13 @@ object Similarity {
     * with. Returns (touched cells, steps). */
   private[graft] def deleteFromIvfSteps(spark: org.apache.spark.sql.SparkSession,
                                         path: String, deleteIds: DataFrame, idCol: String)
+      : (Array[Int], Seq[(String, () => Unit)]) =
+    deleteFromIvfSteps(spark, StoreProtocol.fsOf(spark, path), path, deleteIds, idCol)
+
+  private[graft] def deleteFromIvfSteps(spark: org.apache.spark.sql.SparkSession,
+                                        fs: org.apache.hadoop.fs.FileSystem, path: String,
+                                        deleteIds: DataFrame, idCol: String)
       : (Array[Int], Seq[(String, () => Unit)]) = {
-    val fs = StoreProtocol.fsOf(spark, path)
     val idx = spark.read.parquet(path)
     val dels = broadcast(deleteIds.select(col(idCol)).distinct())
     val touched = idx.select(col(idCol), col("__cell"))
@@ -400,8 +407,10 @@ object Similarity {
         s"cell-$c-swap-in" -> (() => {
           // no staging dir = cell emptied: dropping old IS the delete
           if (fs.exists(src) && !fs.rename(src, dst)) {
-            fs.rename(old, dst) // best-effort restore
-            throw new java.io.IOException(s"ivf delete: rename $src -> $dst failed")
+            val e = new java.io.IOException(s"ivf delete: rename $src -> $dst failed")
+            if (!fs.rename(old, dst))
+              e.addSuppressed(new java.io.IOException(s"ivf delete: restore rename $old -> $dst failed"))
+            throw e
           }
         }),
         s"cell-$c-drop-old" -> (() => { if (fs.exists(old)) { fs.delete(old, true) }; () }),

@@ -15,11 +15,11 @@ object HdfsOps {
 
   /** Strip a leading '.' (the in-progress marker convention) so the
     * file becomes visible to readers. Returns the new path, or the
-    * original when it was already visible. */
+    * original when it was already visible; a failed rename throws. */
   def makePathVisible(path: Path, fs: FileSystem): Path =
     if (path.getName.startsWith(".")) {
       val dest = new Path(path.getParent, path.getName.drop(1))
-      fs.rename(path, dest)
+      if (!fs.rename(path, dest)) throw new java.io.IOException(s"rename $path -> $dest failed")
       dest
     } else path
 

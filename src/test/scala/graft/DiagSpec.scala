@@ -36,7 +36,7 @@ class DiagSpec extends SparkSpec {
   test("time prints a median per query") {
     val out = diag("time")
     queries.foreach(q => assert(out.linesIterator.exists(l =>
-      l.startsWith(q) && l.matches(".* median +\\d+\\.\\d{3} s  n=\\d+  compiles=\\d+")), out))
+      l.startsWith(q) && l.matches(".* median +\\d+\\.\\d{3} s  n=\\d+  compiles=\\d+  forks=\\d+")), out))
   }
 
   test("time recompiles nothing when every pass restarts a stream") {
@@ -44,7 +44,13 @@ class DiagSpec extends SparkSpec {
     // session; with one executor class loader for every session its
     // generated classes stay cache hits after the warm-up
     val out = diag("time", Seq("corpus_stream"))
-    assert(out.matches("corpus_stream .* compiles=0"), out)
+    assert(out.matches("corpus_stream .* compiles=0 .*"), out)
+  }
+
+  test("time forks no Hadoop shell process when every pass restarts a stream") {
+    // each pass writes corpus state, export parquet and checkpoint logs
+    val out = diag("time", Seq("corpus_stream"))
+    assert(out.matches("corpus_stream .* forks=0"), out)
   }
 
   test("audit returns a PLANS.md table row per query") {

@@ -51,6 +51,17 @@ class HdfsSourceSpec extends SparkSpec {
     assert(found.contains("hidden.dat"))
   }
 
+  test("HdfsOps.makePathVisible throws when the rename fails") {
+    val (dir, fs) = scratch()
+    Files.write(java.nio.file.Paths.get(dir, ".hidden.dat"), "x".getBytes)
+    val refusing = new org.apache.hadoop.fs.FilterFileSystem(fs) {
+      override def rename(src: Path, dst: Path): Boolean = false
+    }
+    val e = intercept[java.io.IOException](HdfsOps.makePathVisible(new Path(dir, ".hidden.dat"), refusing))
+    assert(e.getMessage.contains(".hidden.dat") && e.getMessage.contains("/hidden.dat"), e.getMessage)
+    assert(fs.exists(new Path(dir, ".hidden.dat")) && !fs.exists(new Path(dir, "hidden.dat")))
+  }
+
   test("AclSpec translates to Hadoop ACL entries (HDFS-only op; local FS rejects)") {
     val e = HdfsSource("/tmp").toHadoopAcl(AclEntrySpec("user", "alice", "rw-"))
     assert(e.getType == AclEntryType.USER && e.getName == "alice"

@@ -350,6 +350,57 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  private def refusingRenames(f: org.apache.hadoop.fs.FileSystem,
+                              fails: org.apache.hadoop.fs.Path => Boolean) =
+    new org.apache.hadoop.fs.FilterFileSystem(f) {
+      override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+        !fails(src) && super.rename(src, dst)
+    }
+
+  private def isAside(p: org.apache.hadoop.fs.Path) = p.getName.startsWith("_old__cell=")
+
+  // tinyVectors' cluster is vec_id % 4: this keeps survivors in every cell
+  private def halfOfEveryCell(path: String) =
+    spark.read.parquet(path).filter(col("vec_id") % 8 < 4).select(col("vec_id")).localCheckpoint(true)
+
+  test("IVF delete repair throws when a survivor cell's roll-back rename fails, keeping staging") {
+    val root = java.nio.file.Files.createTempDirectory("graft_ivfrepairfail").toString
+    val path = s"$root/idx"
+    Similarity.buildIvfIndex(tinyVectors, path, "vec_id", "embedding", dim = 8, nCentroids = 4)
+    val before = cellRel(path)
+    val dels = halfOfEveryCell(path)
+    // crash after the first cell's aside step: it sits under _old__cell=N
+    // and its staged survivors are the roll-back signal
+    val steps = Similarity.deleteFromIvfSteps(spark, path, dels, "vec_id")._2
+    steps.take(2).foreach(_._2())
+    val cell = steps(1)._1.stripPrefix("cell-").stripSuffix("-aside")
+    assert(new java.io.File(s"${path}__delstage/__cell=$cell").exists(), steps(1)._1)
+    val f = graft.operators.StoreProtocol.fsOf(spark, path)
+    val e = intercept[java.io.IOException](Similarity.repairIvfDelete(refusingRenames(f, isAside), path))
+    assert(e.getMessage.contains("_old__cell=") && e.getMessage.contains("/idx/__cell="), e.getMessage)
+    assert(new java.io.File(path + "__delstage").exists(), "staging disambiguates the next repair")
+    Similarity.deleteFromIvfIndex(spark, path, spark.range(0).select(col("id").as("vec_id")), "vec_id")
+    assert(cellRel(path) == before)
+  }
+
+  test("IVF delete swap-in throws naming both paths, with a failed restore attached as suppressed") {
+    val root = java.nio.file.Files.createTempDirectory("graft_ivfswapfail").toString
+    val path = s"$root/idx"
+    Similarity.buildIvfIndex(tinyVectors, path, "vec_id", "embedding", dim = 8, nCentroids = 4)
+    val before = cellRel(path)
+    val dels = halfOfEveryCell(path)
+    val f = graft.operators.StoreProtocol.fsOf(spark, path)
+    val staged = (p: org.apache.hadoop.fs.Path) => p.getParent.getName == "idx__delstage"
+    val steps = Similarity.deleteFromIvfSteps(spark, refusingRenames(f, p => staged(p) || isAside(p)),
+      path, dels, "vec_id")._2
+    val e = intercept[java.io.IOException](steps.foreach(_._2()))
+    assert(e.getMessage.contains("idx__delstage/__cell=") && e.getMessage.contains("/idx/__cell="), e.getMessage)
+    assert(e.getSuppressed.exists(_.getMessage.contains("_old__cell=")), e.getSuppressed.toSeq)
+    // the aside copy is still there for the next delete's entry repair
+    Similarity.deleteFromIvfIndex(spark, path, dels, "vec_id")
+    assert(cellRel(path) == before.filter(_.head.asInstanceOf[Long] % 8 >= 4))
+  }
+
   test("IVF replay protection survives marker pruning and cell-rewriting deletes: the applied ledger stays loud") {
     val emb = tinyVectors
     val root = java.nio.file.Files.createTempDirectory("graft_ivfledger").toString

@@ -259,12 +259,12 @@ object Diag {
       // embeddingDrift: three 1-row stat relations (per-side counts/
       // norms + the centroid cosine) crossJoined into the report row
       "quality_emb_drift")
-    val cacheByDesign = Set("dedup_minhash", "dedup_keeplist", "dedup_simhash",
-      // pairEval's predicted side is simhashPairs/minhashPairs,
-      // which cache their tiny candidate relation by design
-      // (documented at the cache site in Dedup.scala)
+    val cacheByDesign = Set("dedup_minhash",
+      // pairEval's predicted side is minhashPairs, which caches its
+      // tiny candidate relation by design (documented at the cache
+      // site in Dedup.scala)
       "dedup_method_eval",
-      "graph_", "pipeline_prepare",
+      "pipeline_prepare",
       // hotKeyJoin's hot-key set: tiny by construction, cached
       // for its three consumers (documented in SkewJoin.scala)
       "q_skew_join")

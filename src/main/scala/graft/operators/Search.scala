@@ -248,7 +248,7 @@ object Search {
   def buildPostingsIndex(docs: DataFrame, path: String, idCol: String,
                          textCol: String, nBuckets: Int = 64): Unit = {
     require(nBuckets >= 1, "nBuckets must be >= 1")
-    val fs = fsOf(docs.sparkSession, path)
+    val fs = StoreProtocol.fsOf(docs.sparkSession, path)
     // a build DEFINES a fresh store, so a rebuild-in-place must
     // neutralize every piece of maintenance state the prior store
     // left. Two mechanisms, both safe at every crash point:
@@ -291,12 +291,10 @@ object Search {
     * stale tombstone can ever match the new epoch. */
   private def priorEpoch(spark: org.apache.spark.sql.SparkSession,
                          fs: org.apache.hadoop.fs.FileSystem, path: String): Long = {
-    def epochAt(p: String): Option[Long] =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(p))) None
-      else scala.util.Try(
-        spark.read.parquet(p).collect()(0).getAs[Long]("epoch")).toOption
-    val stats = new org.apache.hadoop.fs.Path(s"$path/stats")
-    epochAt(stats.toString).orElse(epochAt(StoreProtocol.aside(stats).toString)).getOrElse(-1L)
+    val stats = StoreProtocol.readable(fs, new org.apache.hadoop.fs.Path(s"$path/stats"))
+    if (!fs.exists(stats)) -1L
+    else scala.util.Try(
+      spark.read.parquet(stats.toString).collect()(0).getAs[Long]("epoch")).getOrElse(-1L)
   }
 
   /** One row per token occurrence (idCol, __pos, term, __bucket) —
@@ -370,50 +368,14 @@ object Search {
   def appendPostingsIndex(delta: DataFrame, path: String, idCol: String,
                           textCol: String, batchId: String,
                           streamBatch: Boolean = false): Unit = {
-    StoreProtocol.requireBatchId(batchId)
-    // all-digit ids (and legacy stream<N>) are the stream twins'
-    // monotone sequence — a manual append with a large numeric id
-    // would raise the ledger's high-water mark past the live stream's
-    // next checkpoint batch and wedge it permanently
-    if (!streamBatch) StoreProtocol.requireManualBatchId(batchId)
     val spark = delta.sparkSession
-    val fs = fsOf(spark, path)
-    if (StoreProtocol.isCommitted(fs, path, batchId)) {
-      // replayed batch: exactly-once no-op — but only after verifying
-      // the redelivery carries the SAME content the marker sealed (a
-      // reset checkpoint re-batches the source; its recycled id may
-      // now hold more rows, and a bare no-op would drop them)
-      StoreProtocol.requireSameReplay(fs, path, batchId,
-        StoreProtocol.contentFingerprint(delta.select(col(idCol), col(textCol))))
-      // drop any leftover staging from a crash between the marker and
-      // the staging cleanup
-      fs.delete(StoreProtocol.stagingDir(path, batchId), true)
-      return
-    }
-    repairAppends(spark, path)
-    // self-heal a compact that crashed between a relation's aside and
-    // its swap-in (stats missing, stats__old present): without this a
-    // pure-streaming store would hard-fail at statsRow on EVERY
-    // subsequent append until an operator manually re-ran compact —
-    // the repair is idempotent, matching compactPostingsIndex's entry
-    repairStoreSwaps(fs, path)
-    // bound the marker set on the path append-only stores actually
-    // take (compact alone would never run for them); retention slack
-    // keeps every recently-redeliverable batch protected, and the
-    // fold-before-prune inside persists every marker's id to the
-    // `_applied` ledger first
-    StoreProtocol.pruneCommitMarkers(fs, path)
-    // a re-used batch id whose marker aged out must fail LOUDLY, not
-    // silently apply twice: the ledger survives marker pruning AND the
-    // compact that folds away the prefixed files; the file probe stays
-    // as defense-in-depth for a store whose ledger was hand-deleted
-    if (StoreProtocol.wasApplied(fs, path, batchId) ||
-        Seq("positions", "postings", "docs").exists(rel => StoreProtocol.hasBatchFiles(
-          fs, new org.apache.hadoop.fs.Path(s"$path/$rel"), batchId)))
-      throw new java.io.IOException(s"append: batch id '$batchId' was already applied " +
-        "under a since-pruned marker; re-using old batch ids is not supported")
-    appendPostingsSteps(delta, path, idCol, textCol, batchId).foreach(_._2())
+    StoreProtocol.append(StoreProtocol.fsOf(spark, path), path, batchId, streamBatch,
+      delta.select(col(idCol), col(textCol)), appendRels, () => repairPostings(spark, path))(
+      appendPostingsSteps(delta, path, idCol, textCol, batchId))
   }
+
+  /** The live relations an append moves a batch into. */
+  private val appendRels = Seq("positions", "postings", "docs").map(r => r -> r)
 
   /** The append protocol as named steps — package-visible so the
     * crash-property spec can kill the run at EVERY step boundary and
@@ -424,7 +386,7 @@ object Search {
                                          textCol: String, batchId: String)
       : Seq[(String, () => Unit)] = {
     val spark = delta.sparkSession
-    val fs = fsOf(spark, path)
+    val fs = StoreProtocol.fsOf(spark, path)
     val st = statsRow(spark, path)
     val nBuckets = st.getAs[Int]("n_buckets")
     val stage = StoreProtocol.stagingDir(path, batchId).toString
@@ -462,57 +424,41 @@ object Search {
           .toDF("n_docs", "total_tokens", "n_buckets", "epoch")
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$stage/stats")
       }),
-      "move-positions" -> (() => StoreProtocol.moveStagedFiles(fs,
-        new org.apache.hadoop.fs.Path(s"$stage/positions"),
-        new org.apache.hadoop.fs.Path(s"$path/positions"), batchId)),
-      "move-postings" -> (() => StoreProtocol.moveStagedFiles(fs,
-        new org.apache.hadoop.fs.Path(s"$stage/postings"),
-        new org.apache.hadoop.fs.Path(s"$path/postings"), batchId)),
-      "move-docs" -> (() => StoreProtocol.moveStagedFiles(fs,
-        new org.apache.hadoop.fs.Path(s"$stage/docs"),
-        new org.apache.hadoop.fs.Path(s"$path/docs"), batchId)),
-    ) ++ StoreProtocol.swapSteps(fs, new org.apache.hadoop.fs.Path(s"$path/stats"),
-      new org.apache.hadoop.fs.Path(s"$stage/stats"), "stats") ++ Seq(
-      "mark-commit" -> (() => StoreProtocol.markCommitted(fs, path, batchId,
-        Some(StoreProtocol.contentFingerprint(delta.select(col(idCol), col(textCol)))))),
-      "clean-staging" -> (() => { fs.delete(new org.apache.hadoop.fs.Path(stage), true); () }),
-    )
+    ) ++ StoreProtocol.commitSteps(fs, path, batchId, delta.select(col(idCol), col(textCol)),
+      appendRels, beforeCommit = StoreProtocol.swapSteps(fs,
+        new org.apache.hadoop.fs.Path(s"$path/stats"),
+        new org.apache.hadoop.fs.Path(s"$stage/stats"), "stats"))
   }
 
-  /** Undo every half-applied (staged but uncommitted) append: delete
-    * the batch's prefixed files from the live relations, restore the
-    * stats swap, and — when the crashed batch had progressed past
-    * staging — rewrite stats from the `docs` sidecar (O(n_docs); the
-    * pure-function contract makes this recomputation, not ledger
-    * arithmetic). Committed batches' leftover staging is dropped.
-    * Runs at every maintenance entry (append/delete/compact). */
-  private[graft] def repairAppends(spark: org.apache.spark.sql.SparkSession,
-                                   path: String): Unit = {
-    val fs = fsOf(spark, path)
-    StoreProtocol.stagedBatches(fs, path).foreach { batchId =>
-      if (StoreProtocol.isCommitted(fs, path, batchId)) {
-        fs.delete(StoreProtocol.stagingDir(path, batchId), true)
-      } else {
-        // a stats aside copy means the crashed batch reached its
-        // stats swap — the live row may already include the batch
-        val stats = new org.apache.hadoop.fs.Path(s"$path/stats")
-        val statsSwapBegun = fs.exists(StoreProtocol.aside(stats))
-        StoreProtocol.repairSwap(fs, stats)
-        val touched = Seq("positions", "postings", "docs").map { rel =>
-          StoreProtocol.deleteBatchFiles(fs,
-            new org.apache.hadoop.fs.Path(s"$path/$rel"), batchId)
-        }.exists(identity)
-        if (touched || statsSwapBegun) {
-          val st = statsRow(spark, path)
-          statsFromDocLens(spark.read.parquet(s"$path/docs"),
-              st.getAs[Int]("n_buckets"), st.getAs[Long]("epoch"))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$path/stats__staging")
-          StoreProtocol.swap(fs, stats, new org.apache.hadoop.fs.Path(s"$path/stats__staging"))
-        }
-        fs.delete(StoreProtocol.stagingDir(path, batchId), true)
+  /** The postings store's entry repair, run by append, delete and
+    * compact. First undo every half-applied append: delete the batch's
+    * prefixed files, restore the stats swap, and — when the crashed
+    * batch had progressed past staging — rewrite stats from the `docs`
+    * sidecar (O(n_docs); the pure-function contract makes this
+    * recomputation, not ledger arithmetic). Then roll every
+    * half-swapped relation of a crashed compact back to a readable
+    * state (see [[StoreProtocol.repairSwap]]): without this a
+    * pure-streaming store would hard-fail at `statsRow` on every later
+    * append until an operator re-ran compact. */
+  private def repairPostings(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+    val fs = StoreProtocol.fsOf(spark, path)
+    val stats = new org.apache.hadoop.fs.Path(s"$path/stats")
+    StoreProtocol.repairStaged(fs, path, appendRels, undone = { touched =>
+      // a stats aside copy means the crashed batch reached its
+      // stats swap — the live row may already include the batch
+      val statsSwapBegun = fs.exists(StoreProtocol.aside(stats))
+      StoreProtocol.repairSwap(fs, stats)
+      if (touched || statsSwapBegun) {
+        val st = statsRow(spark, path)
+        statsFromDocLens(spark.read.parquet(s"$path/docs"),
+            st.getAs[Int]("n_buckets"), st.getAs[Long]("epoch"))
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$path/stats__staging")
+        StoreProtocol.swap(fs, stats, new org.apache.hadoop.fs.Path(s"$path/stats__staging"))
       }
-    }
+    })
+    storeRels.foreach(rel =>
+      StoreProtocol.repairSwap(fs, new org.apache.hadoop.fs.Path(s"$path/$rel")))
   }
 
   /** TOMBSTONE-delete documents from a persisted postings index — the
@@ -539,10 +485,7 @@ object Search {
     * docs. */
   def deleteFromPostingsIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                               deleteIds: DataFrame, idCol: String): Long = {
-    repairAppends(spark, path)
-    // same entry self-heal as append: a compact crashed mid-swap must
-    // not hard-fail the statsRow read below until a manual re-compact
-    repairStoreSwaps(fsOf(spark, path), path)
+    repairPostings(spark, path)
     val epoch = statsRow(spark, path).getAs[Long]("epoch")
     val dels = broadcast(deleteIds.select(col(idCol)).distinct())
     val existing = currentTombstones(spark, path, epoch)
@@ -565,18 +508,10 @@ object Search {
                                     path: String): DataFrame =
     spark.read.parquet(s"$path/docs")
 
-  /** The filesystem OWNING `path` — never the default FS: an index on
-    * s3a:// or hdfs:// with a file:// default would otherwise probe
-    * tombstones and run swaps against the wrong filesystem (the
-    * Compact.scala / FilePattern.scala pattern). */
-  private def fsOf(spark: org.apache.spark.sql.SparkSession,
-                   path: String): org.apache.hadoop.fs.FileSystem =
-    StoreProtocol.fsOf(spark, path)
-
   private def tombstones(spark: org.apache.spark.sql.SparkSession,
                          path: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(s"$path/deleted")
-    if (fsOf(spark, path).exists(p)) Some(spark.read.parquet(p.toString)) else None
+    if (StoreProtocol.fsOf(spark, path).exists(p)) Some(spark.read.parquet(p.toString)) else None
   }
 
   /** Tombstones the query path must apply: only those written under
@@ -592,13 +527,6 @@ object Search {
 
   /** The four swapped relations of a postings store, stats last. */
   private val storeRels = Seq("postings", "positions", "docs", "stats")
-
-  /** Roll every half-swapped relation back to a readable state (see
-    * [[StoreProtocol.repairSwap]]) — the entry repair of append,
-    * delete and compact. */
-  private def repairStoreSwaps(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit =
-    storeRels.foreach(rel =>
-      StoreProtocol.repairSwap(fs, new org.apache.hadoop.fs.Path(s"$path/$rel")))
 
   /** Fold tombstones into the postings physically — the merge half of
     * the delete design: postings/positions/docs rewritten minus the
@@ -622,9 +550,7 @@ object Search {
     * docs leaves no postings files to infer a schema from (delete the
     * store instead of retiring its last document). */
   def compactPostingsIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val fs = fsOf(spark, path)
-    repairAppends(spark, path)
-    repairStoreSwaps(fs, path)
+    repairPostings(spark, path)
     if (tombstones(spark, path).isDefined) {
       val steps = compactPostingsSteps(spark, path)
       // guide §2.6: the three anti-join staging rewrites read disjoint
@@ -654,7 +580,7 @@ object Search {
     * tombstones the moment the new stats land. */
   private[graft] def compactPostingsSteps(spark: org.apache.spark.sql.SparkSession,
                                           path: String): Seq[(String, () => Unit)] = {
-    val fs = fsOf(spark, path)
+    val fs = StoreProtocol.fsOf(spark, path)
     val st = statsRow(spark, path)
     val nBuckets = st.getAs[Int]("n_buckets")
     val epoch = st.getAs[Long]("epoch")
@@ -727,12 +653,9 @@ object Search {
     * [[graft.operators.StoreProtocol.wasApplied]]). */
   def postingsStoreStats(spark: org.apache.spark.sql.SparkSession,
                          path: String): DataFrame = {
-    val fs = fsOf(spark, path)
-    val stats = new org.apache.hadoop.fs.Path(s"$path/stats")
-    val st =
-      if (!fs.exists(stats) && fs.exists(StoreProtocol.aside(stats)))
-        spark.read.parquet(StoreProtocol.aside(stats).toString).collect()(0)
-      else statsRow(spark, path)
+    val fs = StoreProtocol.fsOf(spark, path)
+    val st = spark.read.parquet(StoreProtocol.readable(fs,
+      new org.apache.hadoop.fs.Path(s"$path/stats")).toString).collect()(0)
     val epoch = st.getAs[Long]("epoch")
     val (nDel, tokDel) = currentTombstones(spark, path, epoch).fold((0L, 0L)) { t =>
       val r = t.agg(count(lit(1)).cast("long").as("n"),
@@ -741,13 +664,12 @@ object Search {
     }
     val nDocs = st.getAs[Long]("n_docs")
     val bytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(path)).getLength
-    val uncommitted = StoreProtocol.stagedBatches(fs, path)
-      .count(b => !StoreProtocol.isCommitted(fs, path, b))
     val (replayHw, replayIds) = StoreProtocol.readLedger(fs, path)
     spark.createDataFrame(Seq((nDocs - nDel, nDel,
         if (nDocs == 0) 0.0 else math.rint(nDel.toDouble / nDocs * 1e6) / 1e6,
         st.getAs[Long]("total_tokens") - tokDel, st.getAs[Int]("n_buckets"),
-        epoch, bytes, uncommitted.toLong, replayHw, replayIds.size.toLong)))
+        epoch, bytes, StoreProtocol.uncommittedBatches(fs, path), replayHw,
+        replayIds.size.toLong)))
       .toDF("live_docs", "tombstoned_docs", "tombstone_fraction",
         "total_tokens", "n_buckets", "epoch", "bytes", "uncommitted_batches",
         "replay_hw", "replay_named")

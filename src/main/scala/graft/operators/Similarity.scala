@@ -221,36 +221,13 @@ object Similarity {
   def appendIvfIndex(delta: DataFrame, path: String, centroidsFlat: Array[Double],
                      vecCol: String, dim: Int, batchId: String,
                      streamBatch: Boolean = false): Unit = {
-    StoreProtocol.requireBatchId(batchId)
-    // numeric id space is reserved for the stream twins (the
-    // appendPostingsIndex rationale: one manual numeric append can
-    // wedge a live stream via the ledger's high-water rule)
-    if (!streamBatch) StoreProtocol.requireManualBatchId(batchId)
-    val spark = delta.sparkSession
-    val fs = StoreProtocol.fsOf(spark, path)
-    if (StoreProtocol.isCommitted(fs, path, batchId)) {
-      // replay no-op — after verifying the redelivered content matches
-      // what the marker sealed (the appendPostingsIndex discipline)
-      StoreProtocol.requireSameReplay(fs, path, batchId,
-        StoreProtocol.contentFingerprint(delta))
-      fs.delete(StoreProtocol.stagingDir(path, batchId), true)
-      return
-    }
-    repairIvfRebuild(fs, path)
-    repairIvfAppends(spark, path)
-    // bound the marker set on the append-only path, and fail loudly
-    // on a re-used batch id whose marker aged out (the
-    // appendPostingsIndex discipline — see StoreProtocol): the
-    // `_applied` ledger (folded before any pruning) keeps the guard
-    // loud even after a cell-rewriting delete folded away the
-    // batch's prefixed files; the file probe stays as defense-in-depth
-    StoreProtocol.pruneCommitMarkers(fs, path)
-    if (StoreProtocol.wasApplied(fs, path, batchId) ||
-        StoreProtocol.hasBatchFiles(fs, new org.apache.hadoop.fs.Path(path), batchId))
-      throw new java.io.IOException(s"append: batch id '$batchId' was already applied " +
-        "under a since-pruned marker; re-using old batch ids is not supported")
-    appendIvfSteps(delta, path, centroidsFlat, vecCol, dim, batchId).foreach(_._2())
+    val fs = StoreProtocol.fsOf(delta.sparkSession, path)
+    StoreProtocol.append(fs, path, batchId, streamBatch, delta, ivfRels, () => repairIvf(fs, path))(
+      appendIvfSteps(delta, path, centroidsFlat, vecCol, dim, batchId))
   }
+
+  /** An IVF append moves a batch into the cell dirs under the root. */
+  private val ivfRels = Seq("cells" -> "")
 
   /** The IVF append protocol as named steps — package-visible so the
     * crash-property spec can kill the run at every step boundary. */
@@ -266,27 +243,21 @@ object Similarity {
         delta.withColumn("__cell", element_at(cell1, 1))
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .partitionBy("__cell").parquet(stage.toString)),
-      "move-cells" -> (() => StoreProtocol.moveStagedFiles(fs, stage,
-        new org.apache.hadoop.fs.Path(path), batchId)),
-      "mark-commit" -> (() => StoreProtocol.markCommitted(fs, path, batchId,
-        Some(StoreProtocol.contentFingerprint(delta)))),
-      "clean-staging" -> (() => { fs.delete(stage, true); () }),
-    )
+    ) ++ StoreProtocol.commitSteps(fs, path, batchId, delta, ivfRels)
   }
 
-  /** Undo every half-applied (staged but uncommitted) IVF append —
-    * delete the batch's prefixed files from the live cells, drop the
-    * staging; committed batches' leftover staging is dropped. Runs at
-    * every maintenance entry (append/delete). No derived state to
-    * recompute: the index IS the data files. */
-  private[graft] def repairIvfAppends(spark: org.apache.spark.sql.SparkSession,
-                                      path: String): Unit = {
-    val fs = StoreProtocol.fsOf(spark, path)
-    StoreProtocol.stagedBatches(fs, path).foreach { batchId =>
-      if (!StoreProtocol.isCommitted(fs, path, batchId))
-        StoreProtocol.deleteBatchFiles(fs, new org.apache.hadoop.fs.Path(path), batchId)
-      fs.delete(StoreProtocol.stagingDir(path, batchId), true)
-    }
+  /** The IVF store's entry repair, run by append, delete and rebuild:
+    * roll a crashed rebuild to a consistent root, undo every
+    * half-applied append (no derived state to recompute — the index IS
+    * the data files), then settle half-finished per-cell delete swaps.
+    * An append that skipped the last would `mkdirs` a torn delete's
+    * `__cell=N` next to its `_old__cell=N`, and the delete's retry
+    * would then drop the aside copy — every survivor of that cell —
+    * as a completed swap's leftover. */
+  private def repairIvf(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
+    repairIvfRebuild(fs, path)
+    StoreProtocol.repairStaged(fs, path, ivfRels)
+    repairIvfDelete(fs, path)
   }
 
   /** Delete vectors from a persisted IVF index without a rebuild —
@@ -311,8 +282,9 @@ object Similarity {
     * Idempotent at-least-once (the appendIvfIndex contract):
     * re-running the same delete finds no surviving target ids in pass
     * 2 (no touched cells, no-op), and a crash at ANY point is
-    * repaired at the next delete's ENTRY (property-pinned: the spec
-    * kills the protocol at every step boundary) — cell dirs are
+    * repaired by [[repairIvf]] at the next maintenance entry —
+    * append, delete or rebuild (property-pinned: the specs kill the
+    * protocol at every step boundary) — cell dirs are
     * renamed aside (`_old__cell=N`) before being replaced, never
     * deleted first. While an `_old` lingers, a root read fails LOUDLY
     * on the conflicting partition name (never silently resurrects);
@@ -331,9 +303,7 @@ object Similarity {
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                          deleteIds: DataFrame, idCol: String): Int = {
     val fs = StoreProtocol.fsOf(spark, path)
-    repairIvfRebuild(fs, path)
-    repairIvfAppends(spark, path)
-    repairIvfDelete(fs, path)
+    repairIvf(fs, path)
     // the store's stop-the-world window: bound the commit-marker set
     // (the compactPostingsIndex discipline — only the newest streamed
     // batch can ever be redelivered)
@@ -437,20 +407,14 @@ object Similarity {
     // root momentarily absent — report over the preserved `__old` copy
     // (identical data pre-swap) instead of failing in exactly the
     // state the probe exists to surface; `pending_rebuild` flags it
-    val livePath = new org.apache.hadoop.fs.Path(path)
     val pendingRebuild = fs.exists(new org.apache.hadoop.fs.Path(path + "__rebuild"))
-    val base =
-      if (!fs.exists(livePath) && fs.exists(StoreProtocol.aside(livePath)))
-        StoreProtocol.aside(livePath)
-      else livePath
+    val base = StoreProtocol.readable(fs, new org.apache.hadoop.fs.Path(path))
     val statsRoot = base.toString
     val cellDirs = fs.listStatus(base).filter(_.getPath.getName.startsWith("__cell="))
     val pendingOld = fs.listStatus(base).count(_.getPath.getName.startsWith("_old__cell="))
     val nFiles = cellDirs.map(d => fs.listStatus(d.getPath)
       .count(s => s.isFile && !s.getPath.getName.startsWith("_"))).sum
     val bytes = fs.getContentSummary(base).getLength
-    val uncommitted = StoreProtocol.stagedBatches(fs, statsRoot)
-      .count(b => !StoreProtocol.isCommitted(fs, statsRoot, b))
     // count from the LIVE cell dirs explicitly (basePath keeps the
     // partition column): a root read would trip over a pending
     // _old__cell dir's conflicting partition name — the health report
@@ -461,7 +425,7 @@ object Similarity {
         .parquet(cellDirs.map(_.getPath.toString).toSeq: _*).count()
     val (replayHw, replayIds) = StoreProtocol.readLedger(fs, statsRoot)
     spark.createDataFrame(Seq((nVectors,
-        cellDirs.length.toLong, nFiles.toLong, bytes, uncommitted.toLong,
+        cellDirs.length.toLong, nFiles.toLong, bytes, StoreProtocol.uncommittedBatches(fs, statsRoot),
         pendingOld.toLong, replayHw, replayIds.size.toLong, pendingRebuild)))
       .toDF("n_vectors", "n_cells", "n_files", "bytes",
         "uncommitted_batches", "pending_cell_swaps", "replay_hw", "replay_named",
@@ -644,31 +608,15 @@ object Similarity {
   def appendIvfPqIndex(delta: DataFrame, path: String, centroidsFlat: Array[Double],
                        codebooks: Array[Array[Double]], idCol: String, vecCol: String,
                        dim: Int, batchId: String, streamBatch: Boolean = false): Unit = {
-    StoreProtocol.requireBatchId(batchId)
-    // all-digit ids (and legacy stream<N>) are reserved for stream
-    // twins — a manual numeric append would raise the ledger's
-    // high-water mark past a live stream's next batch and wedge it
-    if (!streamBatch) StoreProtocol.requireManualBatchId(batchId)
-    val spark = delta.sparkSession
-    val fs = StoreProtocol.fsOf(spark, path)
-    if (StoreProtocol.isCommitted(fs, path, batchId)) {
-      // exactly-once replay no-op — after verifying the redelivered
-      // content matches what the marker sealed
-      StoreProtocol.requireSameReplay(fs, path, batchId,
-        StoreProtocol.contentFingerprint(delta.select(col(idCol), col(vecCol))))
-      fs.delete(StoreProtocol.stagingDir(path, batchId), true)
-      return
-    }
-    repairIvfPqAppends(spark, path)
-    StoreProtocol.pruneCommitMarkers(fs, path)
-    if (StoreProtocol.wasApplied(fs, path, batchId) ||
-        Seq("codes", "vectors").exists(rel => StoreProtocol.hasBatchFiles(
-          fs, new org.apache.hadoop.fs.Path(s"$path/$rel"), batchId)))
-      throw new java.io.IOException(s"append: batch id '$batchId' was already applied " +
-        "under a since-pruned marker; re-using old batch ids is not supported")
-    appendIvfPqSteps(delta, path, centroidsFlat, codebooks, idCol, vecCol, dim, batchId)
-      .foreach(_._2())
+    val fs = StoreProtocol.fsOf(delta.sparkSession, path)
+    // the PQ store's one entry repair: it has no delete or rebuild
+    StoreProtocol.append(fs, path, batchId, streamBatch, delta.select(col(idCol), col(vecCol)),
+      ivfPqRels, () => StoreProtocol.repairStaged(fs, path, ivfPqRels))(
+      appendIvfPqSteps(delta, path, centroidsFlat, codebooks, idCol, vecCol, dim, batchId))
   }
+
+  /** The two relations a PQ append moves a batch into. */
+  private val ivfPqRels = Seq("codes", "vectors").map(r => r -> r)
 
   /** The PQ append protocol as named steps — package-visible so the
     * crash-property spec can kill the run at every step boundary.
@@ -689,31 +637,8 @@ object Similarity {
         ivfPqVectorsRel(delta, centroidsFlat, idCol, vecCol, dim)
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .partitionBy("__cell").parquet(s"$stage/vectors")),
-      "move-codes" -> (() => StoreProtocol.moveStagedFiles(fs,
-        new org.apache.hadoop.fs.Path(s"$stage/codes"),
-        new org.apache.hadoop.fs.Path(s"$path/codes"), batchId)),
-      "move-vectors" -> (() => StoreProtocol.moveStagedFiles(fs,
-        new org.apache.hadoop.fs.Path(s"$stage/vectors"),
-        new org.apache.hadoop.fs.Path(s"$path/vectors"), batchId)),
-      "mark-commit" -> (() => StoreProtocol.markCommitted(fs, path, batchId,
-        Some(StoreProtocol.contentFingerprint(delta.select(col(idCol), col(vecCol)))))),
-      "clean-staging" -> (() => {
-        fs.delete(StoreProtocol.stagingDir(path, batchId), true); ()
-      }),
-    )
-  }
-
-  /** Undo every half-applied PQ append — the [[repairIvfAppends]] twin
-    * over both relations. */
-  private[graft] def repairIvfPqAppends(spark: org.apache.spark.sql.SparkSession,
-                                        path: String): Unit = {
-    val fs = StoreProtocol.fsOf(spark, path)
-    StoreProtocol.stagedBatches(fs, path).foreach { batchId =>
-      if (!StoreProtocol.isCommitted(fs, path, batchId))
-        Seq("codes", "vectors").foreach(rel => StoreProtocol.deleteBatchFiles(
-          fs, new org.apache.hadoop.fs.Path(s"$path/$rel"), batchId))
-      fs.delete(StoreProtocol.stagingDir(path, batchId), true)
-    }
+    ) ++ StoreProtocol.commitSteps(fs, path, batchId, delta.select(col(idCol), col(vecCol)),
+      ivfPqRels)
   }
 
   /** Query the PQ store — output bit-identical to [[ivfPqTopK]] over
@@ -767,15 +692,14 @@ object Similarity {
     val codesBytes = if (fs.exists(codesDir)) fs.getContentSummary(codesDir).getLength else 0L
     val vecsDir = new org.apache.hadoop.fs.Path(s"$path/vectors")
     val vecBytes = if (fs.exists(vecsDir)) fs.getContentSummary(vecsDir).getLength else 0L
-    val uncommitted = StoreProtocol.stagedBatches(fs, path)
-      .count(b => !StoreProtocol.isCommitted(fs, path, b))
     val nVectors =
       if (cellDirs.isEmpty) 0L
       else spark.read.option("basePath", codesDir.toString)
         .parquet(cellDirs.map(_.getPath.toString).toSeq: _*).count()
     val (replayHw, replayIds) = StoreProtocol.readLedger(fs, path)
     spark.createDataFrame(Seq((nVectors, cellDirs.length.toLong, nFiles.toLong,
-        codesBytes, vecBytes, uncommitted.toLong, replayHw, replayIds.size.toLong)))
+        codesBytes, vecBytes, StoreProtocol.uncommittedBatches(fs, path), replayHw,
+        replayIds.size.toLong)))
       .toDF("n_vectors", "n_cells", "n_files", "codes_bytes", "vectors_bytes",
         "uncommitted_batches", "replay_hw", "replay_named")
   }
@@ -856,11 +780,7 @@ object Similarity {
     val fs = StoreProtocol.fsOf(spark, path)
     // a rebuild crash between aside and swap-in leaves the live root
     // absent — decide over the preserved `__old` copy (identical data)
-    val livePath = new org.apache.hadoop.fs.Path(path)
-    val root =
-      if (!fs.exists(livePath) && fs.exists(StoreProtocol.aside(livePath)))
-        StoreProtocol.aside(livePath).toString
-      else path
+    val root = StoreProtocol.readable(fs, new org.apache.hadoop.fs.Path(path)).toString
     val cellsRel = if (pq) s"$root/codes" else root
     val vecsRel = if (pq) s"$root/vectors" else root
     val sizes = liveCellRead(spark, fs, cellsRel)
@@ -932,9 +852,7 @@ object Similarity {
                       seed: Long = 42L,
                       sampleKey: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column] = None): Array[Double] = {
     val fs = StoreProtocol.fsOf(spark, path)
-    repairIvfRebuild(fs, path)
-    repairIvfAppends(spark, path)
-    repairIvfDelete(fs, path)
+    repairIvf(fs, path)
     StoreProtocol.foldMarkersIntoLedger(fs, path)
     val (flat, steps) = rebuildIvfSteps(spark, path, idCol, vecCol, dim, nCentroids, seed, sampleKey)
     steps.foreach(_._2())

@@ -2,14 +2,16 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Shared filesystem protocol for the persisted stores (the postings
-  * index in [[Search]] and the IVF index in [[Similarity]]): staged
-  * batch appends that are CRASH-RETRY-SAFE, and the one preserve-aside
-  * directory swap ([[swapSteps]] / [[repairSwap]]) that every store,
-  * table and export replaces a live copy with — all but the IVF
-  * per-cell delete, whose absent staging cell means "drop".
+/** Shared filesystem protocol for the three persisted stores — the
+  * postings index in [[Search]], the IVF and the IVF-PQ indexes in
+  * [[Similarity]]: one staged-append entry ([[append]], with
+  * [[commitSteps]] and [[repairStaged]]) that is CRASH-RETRY-SAFE, and
+  * the one preserve-aside directory swap ([[swapSteps]] /
+  * [[repairSwap]]) that every store, table and export replaces a live
+  * copy with — all but the IVF per-cell delete, whose absent staging
+  * cell means "drop".
   *
-  * The problem both appends share: a bare parquet `Append` re-run
+  * The problem every append shares: a bare parquet `Append` re-run
   * after a crash duplicates the delta's rows (double tf/df in the
   * postings → silently wrong BM25; double vectors in the IVF cells),
   * and nothing detects the half-applied state. The protocol here is
@@ -32,6 +34,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * re-applies the batch from scratch. Batch ids therefore must not
   * contain `-` (the prefix terminator) or path separators —
   * [[requireBatchId]] pins the alphabet.
+  *
+  * Each store has ONE entry repair, run by every one of its
+  * maintenance entries (append, delete, compact, rebuild): debris one
+  * op leaves is then repaired before a DIFFERENT op runs over it, not
+  * only by the crashed op's own retry.
   *
   * All paths go through the filesystem OWNING the store path — never
   * the default FS (the Compact.scala / FilePattern.scala rule: a
@@ -60,6 +67,13 @@ private[graft] object StoreProtocol {
 
   /** The path a swap sets `live` aside to while its replacement moves in. */
   def aside(live: Path): Path = live.suffix("__old")
+
+  /** The copy of `live` a reader can use mid-crash: its aside copy
+    * while a torn swap has set it aside, else `live` itself — how a
+    * health report stays readable in exactly the state it exists to
+    * surface. */
+  def readable(fs: FileSystem, live: Path): Path =
+    if (!fs.exists(live) && fs.exists(aside(live))) aside(live) else live
 
   private def rename(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst)) throw new java.io.IOException(s"swap: rename $src -> $dst failed")
@@ -111,7 +125,7 @@ private[graft] object StoreProtocol {
     * the whole store; a LEADING `.`/`_` would make the marker
     * invisible to (or collide with the `.crc` sidecars of) the
     * pruning filter below. */
-  def requireBatchId(batchId: String): Unit =
+  private def requireBatchId(batchId: String): Unit =
     require(batchId.matches("[A-Za-z0-9][A-Za-z0-9._]*"),
       s"batch id must match [A-Za-z0-9][A-Za-z0-9._]* (got '$batchId')")
 
@@ -214,7 +228,7 @@ private[graft] object StoreProtocol {
     * reserved; callers driving the protocol the way a stream does
     * (monotone ids from a checkpoint) opt out via their
     * `streamBatch` parameter. */
-  def requireManualBatchId(batchId: String): Unit =
+  private def requireManualBatchId(batchId: String): Unit =
     require(sequenceId(batchId).isEmpty,
       s"batch id '$batchId' is in the numeric id space reserved for stream batches " +
         "(the ledger's high-water rule would wedge a live stream's next batch); " +
@@ -404,7 +418,7 @@ private[graft] object StoreProtocol {
   }
 
   /** Staged batches, committed or not — the repair worklist. */
-  def stagedBatches(fs: FileSystem, path: String): Seq[String] = {
+  private def stagedBatches(fs: FileSystem, path: String): Seq[String] = {
     val root = new Path(s"$path/_staging")
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName)
@@ -414,7 +428,7 @@ private[graft] object StoreProtocol {
     * partition subdirectories (`name=value`) and prefixing each file
     * with `b<batchId>-`. Metadata files (`_SUCCESS`, dot-files) are
     * skipped. Rename failures throw — a silent skip would lose rows. */
-  def moveStagedFiles(fs: FileSystem, staging: Path, live: Path, batchId: String): Unit = {
+  private def moveStagedFiles(fs: FileSystem, staging: Path, live: Path, batchId: String): Unit = {
     if (!fs.exists(staging)) return
     fs.mkdirs(live)
     fs.listStatus(staging).foreach { s =>
@@ -457,7 +471,7 @@ private[graft] object StoreProtocol {
     * (recursing through partition subdirectories). Returns true when
     * anything was deleted — the signal that the crashed batch had
     * progressed past staging and derived state must be recomputed. */
-  def deleteBatchFiles(fs: FileSystem, dir: Path, batchId: String): Boolean = {
+  private def deleteBatchFiles(fs: FileSystem, dir: Path, batchId: String): Boolean = {
     if (!fs.exists(dir)) return false
     val prefix = s"b$batchId-"
     var touched = false
@@ -472,4 +486,91 @@ private[graft] object StoreProtocol {
     }
     touched
   }
+
+  // ---------------------------------------------------------------
+  // The staged append, written once for every store. A store names
+  // the live relations a batch moves into as (step name, dir under
+  // the store root) pairs — dir "" is the root itself (the IVF cells).
+  // ---------------------------------------------------------------
+
+  private def relDir(root: String, dir: String): Path =
+    if (dir.isEmpty) new Path(root) else new Path(root, dir)
+
+  /** The append entry of every store:
+    *   1. pin the batch id's alphabet, and keep the numeric id space
+    *      for stream batches (`streamBatch` false reserves it — one
+    *      manual numeric append would raise the ledger's high-water
+    *      mark past a live stream's next batch and wedge it);
+    *   2. a COMMITTED batch is a replay: verify the redelivered
+    *      content against the marker's fingerprint (a reset
+    *      checkpoint re-batches the source, and its recycled id may
+    *      now hold more rows a bare no-op would drop), drop leftover
+    *      staging of a crash between the marker and the cleanup, and
+    *      return;
+    *   3. the store's entry `repair`;
+    *   4. [[pruneCommitMarkers]] — the fold into the `_applied` ledger
+    *      runs first, so no evidence is lost;
+    *   5. refuse a re-used id whose marker aged out — LOUDLY, not by
+    *      applying it twice: the ledger survives marker pruning AND
+    *      the rewrites (compact, cell deletes) that fold away prefixed
+    *      files; the file probe over `rels` stays as defense-in-depth
+    *      for a store whose ledger was hand-deleted;
+    *   6. run `steps` — built only now, since they read live state
+    *      the repair may have restored.
+    * `delta` is the relation the marker fingerprints; its aggregate
+    * runs only on a replay or at `mark-commit`. */
+  def append(fs: FileSystem, path: String, batchId: String, streamBatch: Boolean,
+             delta: org.apache.spark.sql.DataFrame, rels: Seq[(String, String)],
+             repair: () => Unit)(steps: => Seq[(String, () => Unit)]): Unit = {
+    requireBatchId(batchId)
+    if (!streamBatch) requireManualBatchId(batchId)
+    if (isCommitted(fs, path, batchId)) {
+      requireSameReplay(fs, path, batchId, contentFingerprint(delta))
+      fs.delete(stagingDir(path, batchId), true)
+      return
+    }
+    repair()
+    pruneCommitMarkers(fs, path)
+    if (wasApplied(fs, path, batchId) ||
+        rels.exists { case (_, dir) => hasBatchFiles(fs, relDir(path, dir), batchId) })
+      throw new java.io.IOException(s"append: batch id '$batchId' was already applied " +
+        "under a since-pruned marker; re-using old batch ids is not supported")
+    steps.foreach(_._2())
+  }
+
+  /** The tail every append's steps end in: `move-<name>` per relation
+    * (staged `_staging/<batchId>/<dir>` renamed into `<path>/<dir>`),
+    * then `beforeCommit` (the postings stats swap), `mark-commit`
+    * sealing the batch with `delta`'s fingerprint, and
+    * `clean-staging`, which is cosmetic. */
+  def commitSteps(fs: FileSystem, path: String, batchId: String,
+                  delta: org.apache.spark.sql.DataFrame, rels: Seq[(String, String)],
+                  beforeCommit: Seq[(String, () => Unit)] = Nil): Seq[(String, () => Unit)] = {
+    val stage = stagingDir(path, batchId)
+    rels.map { case (name, dir) =>
+      s"move-$name" -> (() => moveStagedFiles(fs, relDir(stage.toString, dir),
+        relDir(path, dir), batchId))
+    } ++ beforeCommit ++ Seq(
+      "mark-commit" -> (() => markCommitted(fs, path, batchId, Some(contentFingerprint(delta)))),
+      "clean-staging" -> (() => { fs.delete(stage, true); () }))
+  }
+
+  /** Undo every half-applied (staged but uncommitted) batch: delete
+    * its prefixed files from the live `rels`, then call `undone` with
+    * whether any were deleted — the signal for a store with derived
+    * state to recompute it. Every staging dir, committed or not, is
+    * dropped. */
+  def repairStaged(fs: FileSystem, path: String, rels: Seq[(String, String)],
+                   undone: Boolean => Unit = _ => ()): Unit =
+    stagedBatches(fs, path).foreach { batchId =>
+      if (!isCommitted(fs, path, batchId))
+        undone(rels.map { case (_, dir) => deleteBatchFiles(fs, relDir(path, dir), batchId) }
+          .contains(true))
+      fs.delete(stagingDir(path, batchId), true)
+    }
+
+  /** Staged batches with no commit marker — a health report's count of
+    * appends a crash left for the next entry repair. */
+  def uncommittedBatches(fs: FileSystem, path: String): Long =
+    stagedBatches(fs, path).count(b => !isCommitted(fs, path, b)).toLong
 }

@@ -2,8 +2,8 @@ package graft.sources
 
 import java.io.FileNotFoundException
 import java.net.URI
-import java.nio.file.{Files, NoSuchFileException}
-import java.nio.file.attribute.PosixFilePermission
+import java.nio.file.{Files, LinkOption, NoSuchFileException}
+import java.nio.file.attribute.{GroupPrincipal, PosixFilePermission, UserPrincipal}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
@@ -16,9 +16,11 @@ import org.apache.hadoop.io.nativeio.NativeIO
   * false, as in a plain `local[n]` JVM), Hadoop's
   * `RawLocalFileSystem.setPermission` runs `chmod` through
   * `org.apache.hadoop.util.Shell` for every file, `.crc` file and
-  * directory a write creates, and `getFileLinkStatus` forks `readlink`.
-  * [[LocalFs.RawFileSystem]] does both through `java.nio` instead; file
-  * modes, checksums and every other call are Hadoop's own.
+  * directory a write creates, `getFileLinkStatus` forks `readlink`, and
+  * the first read of a status's permission, owner or group forks
+  * `ls -ld`. [[LocalFs.RawFileSystem]] does all three through
+  * `java.nio` instead; file modes, checksums and every other call are
+  * Hadoop's own.
   *
   * The `FileSystem` cache is JVM-wide and keyed by scheme, so this
   * class takes effect only if it creates the JVM's first `file:`
@@ -36,9 +38,10 @@ class LocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new LocalFs.RawF
 
 object LocalFs {
 
-  /** `RawLocalFileSystem` that sets the nine rwx bits and reads link
-    * status without forking. Anything else — libhadoop loaded, a sticky
-    * bit, a non-POSIX path, a real symlink — goes to Hadoop's code. */
+  /** `RawLocalFileSystem` that sets the nine rwx bits, reads link
+    * status and loads a status's permission, owner and group without
+    * forking. Anything else — libhadoop loaded, setting a sticky bit, a
+    * non-POSIX path, a real symlink — goes to Hadoop's code. */
   private[sources] class RawFileSystem extends RawLocalFileSystem {
     override def setPermission(p: Path, permission: FsPermission): Unit = {
       val file = pathToFile(p).toPath
@@ -61,6 +64,47 @@ object LocalFs {
     override def getFileLinkStatus(f: Path): FileStatus =
       if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
       else getFileStatus(f)
+
+    override def getFileStatus(f: Path): FileStatus = lazyOwnership(super.getFileStatus(f))
+
+    // a directory's entries come through getFileStatus; a file's own
+    // listing does not
+    override def listStatus(f: Path): Array[FileStatus] = super.listStatus(f).map(lazyOwnership)
+
+    private def lazyOwnership(st: FileStatus): FileStatus = st match {
+      case s: PosixStatus => s
+      case _ =>
+        val file = pathToFile(st.getPath).toPath
+        if (NativeIO.isAvailable || !file.getFileSystem.supportedFileAttributeViews.contains("unix")) st
+        else new PosixStatus(st, file)
+    }
+  }
+
+  /** `st` with its permission, owner and group loaded on first read by
+    * one `lstat` of `file` — the link itself, as Hadoop's `ls -ld`
+    * reads it. The permission keeps the rwx and sticky bits, as
+    * `FsPermission.valueOf` parses them from `ls` output; a file that
+    * is gone keeps the defaults and is read again next time, as in
+    * Hadoop. */
+  private final class PosixStatus(st: FileStatus, file: java.nio.file.Path) extends FileStatus(
+      st.getLen, st.isDirectory, st.getReplication, st.getBlockSize, st.getModificationTime,
+      st.getAccessTime, null, null, null, if (st.isSymlink) st.getSymlink else null, st.getPath) {
+    private var loaded = false
+
+    private def load(): Unit = synchronized {
+      if (!loaded) try {
+        val a = Files.readAttributes(file, "unix:mode,owner,group", LinkOption.NOFOLLOW_LINKS)
+        super.setPermission(new FsPermission((a.get("mode").asInstanceOf[Int] & 0x3ff).toShort))
+        super.setOwner(a.get("owner").asInstanceOf[UserPrincipal].getName)
+        super.setGroup(a.get("group").asInstanceOf[GroupPrincipal].getName)
+        loaded = true
+      } catch { case _: NoSuchFileException => () }
+    }
+
+    override def getPermission: FsPermission = { load(); super.getPermission }
+    override def getOwner: String = { load(); super.getOwner }
+    override def getGroup: String = { load(); super.getGroup }
+    override def write(out: java.io.DataOutput): Unit = { load(); super.write(out) }
   }
 
   /** `org.apache.hadoop.fs.local.RawLocalFs` over [[RawFileSystem]]. */

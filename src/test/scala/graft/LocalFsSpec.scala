@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Pipeline, StoreProtocol}
+import graft.sources.{FilePattern, HdfsSource}
 import graft.streaming.StreamOps
 import java.net.URI
 import java.nio.file.{Files, Paths}
@@ -75,6 +76,26 @@ class LocalFsSpec extends SparkSpec {
     val (_, forks) = Diag.shellForks(fs.setPermission(new Path(s"$base/t"), new FsPermission("1777")))
     assert(mode(s"$base/t") == oct("1777") && forks == 1)
     intercept[java.io.IOException](fs.setPermission(new Path(s"$base/none"), new FsPermission("600")))
+  }
+
+  test("permission, owner and group read as Hadoop's, and a listing of five files forks no Shell process") {
+    val base = tmpDir("graft_localfs_owner")
+    (1 to 5).foreach(i => Files.write(Paths.get(base, s"f$i.txt"), s"$i".getBytes))
+    val fs = FileSystem.get(local, conf)
+    val sticky = new Path(s"$base/sticky")
+    fs.mkdirs(sticky)
+    fs.setPermission(sticky, new FsPermission("1777"))
+    val hadoop = new org.apache.hadoop.fs.RawLocalFileSystem
+    hadoop.initialize(local, conf)
+    def ownership(st: org.apache.hadoop.fs.FileStatus) = (st.getPermission, st.getOwner, st.getGroup)
+    for (p <- Seq(new Path(s"$base/f1.txt"), new Path(base), sticky))
+      assert(ownership(fs.getFileStatus(p)) == ownership(hadoop.getFileStatus(p)), p)
+    assert(fs.getFileStatus(sticky).getPermission.getStickyBit)
+    val src = HdfsSource(FilePattern(base).withFilter(".*\\.txt".r))
+    val ((listed, perms), forks) = Diag.shellForks((src.listing(spark).collect(), src.permissions(spark)))
+    assert(listed.length == 5 && perms.length == 5)
+    assert(forks == 0)
+    perms.foreach { case (p, perm) => assert(perm == hadoop.getFileStatus(p).getPermission, p) }
   }
 
   test("getFileLinkStatus reports a real symlink as the link and a plain file as itself") {

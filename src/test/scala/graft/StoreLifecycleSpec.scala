@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * the live corpus after EVERY op. The single-op crash properties
   * (SearchSpec / SimilaritySpec) pin each protocol in isolation; this
   * pins their INTERACTIONS — append after delete, delete over
-  * appended batches, compact mid-history, crash debris crossing op
-  * boundaries. */
+  * appended batches, compact mid-history. Each killed op is retried
+  * at once, so its own retry meets its debris; StoreCrossOpSpec runs
+  * a different op over the debris first. */
 class StoreLifecycleSpec extends SparkSpec {
   import spark.implicits._
 

@@ -15,10 +15,10 @@ import org.apache.spark.sql.SparkSession
   *     budget — BENCH_r02's 31.7 s vs an identical-code 24.0 s re-run
   *     was pure host noise.
   *   - `spark.catalog.clearCache()` before every measured pass, so
-  *     operator-internal `.cache()` calls (minhash candidate set,
-  *     simhash signatures) can neither bleed warm data into a later
-  *     query's timing nor accumulate across passes and squeeze
-  *     execution memory.
+  *     operator-internal `.cache()` calls (exactJaccardPairs' shingle
+  *     sets, prepare's dedup survivors) can neither bleed warm data
+  *     into a later query's timing nor accumulate across passes and
+  *     squeeze execution memory.
   *
   * Besides the gate queries, the production-mode perf twins
   * (`SparkEntry.perfQueries`: xxhash64 / Gaussian planes / hashed

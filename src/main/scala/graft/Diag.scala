@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
-  SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{CodegenMode, FormattedMode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -125,11 +125,13 @@ object Diag {
     var name, description = ""
   }
 
-  /** Per-stage task duration and metrics from a listener: (tasks,
-    * median ms, max ms, max/median, Σcpu, Σgc, spill, shuffle bytes),
-    * then the stage's call site and its `spark.job.description` (the
-    * operator label, e.g. a graph round; a multi-line one, such as a
-    * streaming batch's id/runId/batch, on one line). SKEW flags a
+  /** The Spark jobs a query's measured run starts (its eager operator
+    * jobs included), then per-stage task duration and metrics from a
+    * listener: (tasks, median ms, max ms, max/median, Σcpu, Σgc, spill,
+    * shuffle bytes), then the stage's call site and its
+    * `spark.job.description` (the operator label, e.g. a graph round; a
+    * multi-line one, such as a streaming batch's id/runId/batch, on one
+    * line). SKEW flags a
     * stage whose straggler holds it above 2× the median — a hot
     * shuffle key the operator's skew defense missed. Stages under
     * 200 ms total or with fewer than 4 tasks are noise. Σcpu ≪ Σwall
@@ -139,8 +141,10 @@ object Diag {
                      q: (SparkSession, String) => DataFrame): String = {
     val n = warm(spark, sfDir, q)
     val byStage = mutable.TreeMap.empty[Int, StageStats]
+    var jobs = 0
     val listener = new SparkListener {
       private def stage(id: Int) = byStage.getOrElseUpdate(id, new StageStats)
+      override def onJobStart(j: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
       override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = synchronized {
         Option(s.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
           .foreach(d => stage(s.stageInfo.stageId).description = d.linesIterator.mkString(" "))
@@ -170,7 +174,7 @@ object Diag {
       w
     } finally sc.removeSparkListener(listener)
 
-    val sb = new StringBuilder(f"=== $name  wall=$wall%.2f s  n=$n%n")
+    val sb = new StringBuilder(f"=== $name  wall=$wall%.2f s  n=$n  jobs=${listener.synchronized(jobs)}%n")
     sb.append(f"${"stage"}%-6s ${"tasks"}%5s ${"med ms"}%7s ${"max ms"}%7s ${"mx/md"}%6s " +
       f"${"cpu s"}%7s ${"gc s"}%6s ${"spill"}%6s ${"sh-r"}%6s ${"sh-w"}%6s  flag%n")
     listener.synchronized(byStage.toSeq).filter(_._2.taskMs.nonEmpty).foreach { case (sid, st) =>
@@ -259,15 +263,14 @@ object Diag {
       // embeddingDrift: three 1-row stat relations (per-side counts/
       // norms + the centroid cosine) crossJoined into the report row
       "quality_emb_drift")
-    val cacheByDesign = Set("dedup_minhash",
-      // pairEval's predicted side is minhashPairs, which caches its
-      // tiny candidate relation by design (documented at the cache
-      // site in Dedup.scala)
+    val cacheByDesign = Set(
+      // pairEval's truth side is exactJaccardPairs, which caches its
+      // sample-sized shingle sets for three consumers (documented at
+      // the cache site in Dedup.scala)
       "dedup_method_eval",
-      "pipeline_prepare",
-      // hotKeyJoin's hot-key set: tiny by construction, cached
-      // for its three consumers (documented in SkewJoin.scala)
-      "q_skew_join")
+      // prepare's exact-dedup survivors, cached for three consumers
+      // (documented in Pipeline.scala)
+      "pipeline_prepare")
 
     val rows = qs.map { case (name, f) =>
       val kind = if (SparkEntry.queries.contains(name)) "gate" else "prod"

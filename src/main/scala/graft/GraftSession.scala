@@ -92,9 +92,9 @@ object GraftSession {
       // free on single-join queries but taxes every multi-join store
       // path with pre-upgrade shuffle stages — corpus_incremental
       // 10.7→17.7 s at sf0.1 — so static broadcasts stay ON and the
-      // Generate-estimate broadcast hazard is closed per-join by
-      // materializing candidate-pair relations before their verify
-      // joins; see Dedup.minhashPairs.)
+      // Generate-estimate broadcast hazard is closed where the pairs
+      // are built: Dedup.pairsFromBuckets bounds its output's size
+      // estimate by the bucket-cap fan-out (operators.FanoutBound).)
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "134217728")
       // Spark's codegen cache is an LRU of (class loader, generated
       // code) → compiled class, capped at 100 entries by default. The

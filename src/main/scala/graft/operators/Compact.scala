@@ -21,7 +21,7 @@ object Compact {
   def compactTo(spark: SparkSession, path: String, targetFileCount: Int,
                 format: String = "parquet"): Int = {
     val hPath = new Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreProtocol.fsOf(spark, path)
     StoreProtocol.repairSwap(fs, hPath)
     val originals = fs.listStatus(hPath).filterNot(_.getPath.getName.startsWith("_"))
     val tmp = new Path(hPath.getParent, hPath.getName + "__compacting")
@@ -51,7 +51,7 @@ object Compact {
                     format: String = "parquet"): (Int, Int) = {
     require(targetFileSizeBytes > 0, "targetFileSizeBytes must be positive")
     val hPath = new Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StoreProtocol.fsOf(spark, path)
     StoreProtocol.repairSwap(fs, hPath)
     val dataFiles = fs.listStatus(hPath).filterNot(_.getPath.getName.startsWith("_"))
     // Flat-directory contract: a partitioned tree (subdirs only) would

@@ -176,8 +176,17 @@ object Dedup {
     * signature expressions are evaluated exactly once). Buckets capped
     * at `maxBucketSize` (skew guard — an n-doc bucket yields n²/2
     * pairs; a degenerate all-identical-spam bucket is dropped rather
-    * than allowed to explode an executor). */
-  /** `dedup=false` skips the cross-bucket `.distinct()` on the emitted
+    * than allowed to explode an executor).
+    *
+    * The result carries its own planner size bound: a [[FanoutBound]]
+    * of `maxBucketSize` over the Generate-built pairs, so no join over
+    * them can statically broadcast a pair explosion that Catalyst's
+    * Generate estimate sizes at scan size (the sf10 8 GiB broadcast
+    * crash). The relation stays lazy — no cache, no eager job — and a
+    * consumer that reads it twice shares one bucket pipeline through
+    * exchange reuse.
+    *
+    * `dedup=false` skips the cross-bucket `.distinct()` on the emitted
     * pairs. The distinct is a pair-COUNT-sized aggregation (hash state
     * per candidate — the single most expensive node of the whole LSH
     * pipeline when buckets are dense: 182.7M-row two-phase agg, 26 GB
@@ -208,11 +217,20 @@ object Dedup {
       .agg(collect_set(col(idCol)).as("__ids"))
       .filter(size(col("__ids")).between(2, maxBucketSize))
       .select(array_sort(col("__ids")).as("__ids"))
-    val pairs = ids
+    // without dedup's exchange, nothing after the explosion is
+    // repartitioned, so spread the buckets over the session's shuffle
+    // parallelism first: AQE sizes the bucket stage by its input bytes
+    // and coalesced a dense corpus's buckets into one partition, which
+    // ran the whole explosion and the caller's verify joins in one task
+    // (sf1 ladder, 4 cores: dedup_embedding 7.4 → 14-17 s)
+    val spread =
+      if (dedup) ids
+      else ids.repartition(bucketed.sparkSession.sessionState.conf.numShufflePartitions, col("__ids"))
+    val pairs = spread
       .select(posexplode(col("__ids")).as(Seq("__i", "id_l")), col("__ids"))
       .select(col("id_l"),
         explode(slice(col("__ids"), col("__i") + 2, size(col("__ids")))).as("id_r"))
-    if (dedup) pairs.distinct() else pairs
+    FanoutBound.bound(if (dedup) pairs.distinct() else pairs, maxBucketSize)
   }
 
   /** [[pairsFromBuckets]] with a per-id payload column carried through
@@ -233,12 +251,9 @@ object Dedup {
     * bit-identical to [[pairsFromBuckets]] (spec-pinned). Use for
     * 8-16 byte signatures; for array payloads (minhash shingle sets,
     * embeddings) keep the id-only variant — carrying KB-sized arrays
-    * 16-bands-wide would multiply shuffle volume ~100× — and
-    * MATERIALIZE the candidate set (cache + count) before the verify
-    * join so the planner decides from its true size: a tiny pair set
-    * still broadcasts for free, an oversized one never can (r15; the
-    * earlier shuffle_hash hints forced both sides to exchange and
-    * cost ~1 s of sf0.1 wall per dedup query). */
+    * 16-bands-wide would multiply shuffle volume ~100×; its
+    * [[FanoutBound]] keeps the verify join from broadcasting the pair
+    * side. */
   def pairsFromBucketsCarrying(bucketed: DataFrame, idCol: String, payloadCol: String,
                                bucketCols: Seq[String], maxBucketSize: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -281,14 +296,9 @@ object Dedup {
 
   /** `numBands <= 0` (the default) auto-selects the geometry from
     * `threshold` via [[bandGeometry]] — pass it explicitly only to
-    * trade recall for candidate volume deliberately.
-    *
-    * Resource contract: the candidate-pair relation is left `.cache()`d
-    * (the returned plan consumes it lazily, so it cannot be unpersisted
-    * here, and the cached TRUE size is what keeps the verify join's
-    * broadcast planning safe). A long-lived session running many dedup
-    * invocations must release it after materializing the result —
-    * `spark.catalog.clearCache()` between jobs, as Bench/Verify do. */
+    * trade recall for candidate volume deliberately. Lazy: the verify
+    * reads the candidate pairs twice (candidate-id semi-join + the pair
+    * join) and exchange reuse runs the bucket pipeline once. */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    numHashes: Int = 64, numBands: Int = 0, shingleK: Int = 3,
                    threshold: Double = 0.5, maxBucketSize: Int = 500): DataFrame = {
@@ -300,56 +310,17 @@ object Dedup {
       .select(col(idCol),
         posexplode(X.minhashBands(T.normText(col(textCol)), shingleK, numHashes, bands))
           .as(Seq("band", "bucket")))
-    // cache: the candidate set is tiny (~true-dup count) but its lineage
-    // is the whole signature pipeline, and the verify stage consumes it
-    // twice (candidate-id semi-join + the pair join). The cache cannot
-    // be unpersisted here — the returned plan consumes it lazily;
-    // sessions running many dedup jobs should clearCache() between
-    // them (Bench does, before every measured pass).
-    val cand = pairsFromBuckets(bucketed, idCol, Seq("band", "bucket"), maxBucketSize).cache()
-    // MATERIALIZE the candidate set (one count over the cached
-    // relation — the verify stage was re-executing it anyway) so the
-    // verify join plans against its TRUE size: a Generate-built pair
-    // relation carries its root scan's size estimate, and letting the
-    // planner statically broadcast a multi-GiB pair explosion was the
-    // sf10 8 GiB crash class. With the size measured, a genuinely tiny
-    // pair set still broadcasts (the sets side is never shuffled) and
-    // an oversized one cannot. (r15 alternatives measured and
-    // rejected: shuffle_hash hints force both sides to exchange,
-    // ~+1 s per dedup query at sf0.1; session-wide estimate-blind
-    // broadcasts tax every multi-join store path.)
-    cand.count()
+    val cand = pairsFromBuckets(bucketed, idCol, Seq("band", "bucket"), maxBucketSize)
     ngramJaccard(cand, df, idCol, textCol, shingleK)
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Exact n-gram Jaccard on candidate pairs (the verify step).
-    *
-    * Shingle sets are built ONLY for docs that appear in a candidate
-    * pair (semi-join first): at 100 TB the candidate set is orders of
-    * magnitude smaller than the corpus, so the expensive
-    * shingle-materialize + the two pair-joins touch a tiny relation
-    * instead of scanning the corpus twice. */
+  /** Exact n-gram Jaccard on candidate pairs (the verify step), over
+    * sets of shingle HASHES (longs), not strings: same Jaccard modulo
+    * 64-bit collisions (~n²/2^64), far cheaper to intersect. */
   def ngramJaccard(pairs: DataFrame, docs: DataFrame, idCol: String, textCol: String,
-                   shingleK: Int): DataFrame = {
-    val candIds = pairs.select(explode(array(col("id_l"), col("id_r"))).as(idCol)).distinct()
-    // sets of shingle HASHES (longs), not strings: same Jaccard modulo
-    // 64-bit collisions (~n²/2^64), far cheaper to intersect
-    val sets = docs.join(candIds, Seq(idCol), "left_semi")
-      .select(col(idCol).as("__id"),
-        array_distinct(X.shingleHashes(T.normText(col(textCol)), shingleK)).as("__set"))
-    // join-plan safety contract: a Generate-built `pairs` relation
-    // must be MATERIALIZED by the caller (cache + count, as
-    // minhashPairs does) so this join plans against its true size —
-    // a scan-sized static estimate on a multi-GiB pair explosion lets
-    // the planner broadcast it (the sf10 8 GiB crash class)
-    pairs
-      .join(sets.select(col("__id").as("id_l"), col("__set").as("set_l")), "id_l")
-      .join(sets.select(col("__id").as("id_r"), col("__set").as("set_r")), "id_r")
-      .select(col("id_l"), col("id_r"),
-        round(size(array_intersect(col("set_l"), col("set_r"))).cast("double") /
-          size(array_union(col("set_l"), col("set_r"))), 6).as("jaccard"))
-  }
+                   shingleK: Int): DataFrame =
+    jaccard(pairSets(pairs, docs, idCol, X.shingleHashes(T.normText(col(textCol)), shingleK)))
 
   /** Exact n-gram Jaccard on candidate pairs over STRING shingle sets
     * (no hashing). Same semantics as [[ngramJaccard]] minus the
@@ -359,18 +330,29 @@ object Dedup {
     * from string_split, making the verify join hash-checkable
     * end-to-end. */
   def ngramJaccardStrings(pairs: DataFrame, docs: DataFrame, idCol: String, textCol: String,
-                          shingleK: Int): DataFrame = {
+                          shingleK: Int): DataFrame =
+    jaccard(pairSets(pairs, docs, idCol, T.shingles(col(textCol), shingleK)))
+
+  private def jaccard(sets: DataFrame): DataFrame =
+    sets.select(col("id_l"), col("id_r"),
+      round(size(array_intersect(col("set_l"), col("set_r"))).cast("double") /
+        size(array_union(col("set_l"), col("set_r"))), 6).as("jaccard"))
+
+  /** The shared verify join of the shingle-set verifiers: each pair
+    * with both sides' distinct shingle sets (id_l, id_r, set_l, set_r).
+    * Sets are built ONLY for docs that appear in a candidate pair
+    * (semi-join first): at 100 TB the candidate set is orders of
+    * magnitude smaller than the corpus, so the expensive
+    * shingle-materialize + the two pair-joins touch a tiny relation
+    * instead of scanning the corpus twice. */
+  private def pairSets(pairs: DataFrame, docs: DataFrame, idCol: String,
+                       shingles: Column): DataFrame = {
     val candIds = pairs.select(explode(array(col("id_l"), col("id_r"))).as(idCol)).distinct()
     val sets = docs.join(candIds, Seq(idCol), "left_semi")
-      .select(col(idCol).as("__id"),
-        array_distinct(T.shingles(col(textCol), shingleK)).as("__set"))
-    // same caller-materializes-pairs contract as ngramJaccard
+      .select(col(idCol).as("__id"), array_distinct(shingles).as("__set"))
     pairs
       .join(sets.select(col("__id").as("id_l"), col("__set").as("set_l")), "id_l")
       .join(sets.select(col("__id").as("id_r"), col("__set").as("set_r")), "id_r")
-      .select(col("id_l"), col("id_r"),
-        round(size(array_intersect(col("set_l"), col("set_r"))).cast("double") /
-          size(array_union(col("set_l"), col("set_r"))), 6).as("jaccard"))
   }
 
   /** Per-doc MinHash incremental state: LSH band hashes (for candidate
@@ -405,9 +387,9 @@ object Dedup {
     // ship text-sized arrays to every candidate pair)
     // cached: consumed by the exploded self-join AND both size joins —
     // without it the tokenize+shingle projection runs ~3×. (id,
-    // hash-array) rows, sample-sized; same non-unpersist contract as
-    // the banded detectors' candidate caches (Bench clearCache()s
-    // between measured passes).
+    // hash-array) rows, sample-sized; the returned plan reads it
+    // lazily, so it stays cached (Bench clearCache()s between measured
+    // passes).
     val sets = docs.filter(col(textCol).isNotNull)
       .select(col(idCol).as("__id"),
         array_distinct(X.shingleHashes(T.normText(col(textCol)), shingleK)).as("__set"))
@@ -536,29 +518,23 @@ object Dedup {
       .select(col(idCol), col("__s.bands").as("bands"), col("__s.sh").as("sh"))
     val bucketed = all.select(col(idCol),
       posexplode(col("bands")).as(Seq("band", "bucket")))
-    // cached + materialized: the two new-side semi-joins would
-    // otherwise re-run the whole bucket pipeline, and the verify join
-    // must plan against the candidate set's TRUE size (see
-    // minhashPairs — the Generate-estimate broadcast hazard)
-    val cand = pairsFromBuckets(bucketed, idCol, Seq("band", "bucket"), maxBucketSize).cache()
-    cand.count()
-    val withNew = cand.join(newIds.select(col(idCol).as("id_l")), Seq("id_l"), "left_semi")
-      .union(cand.join(newIds.select(col(idCol).as("id_r")), Seq("id_r"), "left_semi")
-        .select("id_l", "id_r"))
+    // pairs with a new side: one read of the candidates, each pair
+    // meeting the new ids once per side
+    val withNew = pairsFromBuckets(bucketed, idCol, Seq("band", "bucket"), maxBucketSize)
+      .select(col("id_l"), col("id_r"), explode(array(col("id_l"), col("id_r"))).as("__id"))
+      .join(newIds.select(col(idCol).as("__id")), Seq("__id"), "left_semi")
+      .select(col("id_l"), col("id_r"))
       .distinct()
     val sets = all.select(col(idCol), col("sh"))
-    val pairs = withNew
+    val pairs = jaccard(withNew
       .join(sets.select(col(idCol).as("id_l"), col("sh").as("set_l")), "id_l")
-      .join(sets.select(col(idCol).as("id_r"), col("sh").as("set_r")), "id_r")
-      .select(col("id_l"), col("id_r"),
-        round(size(array_intersect(col("set_l"), col("set_r"))).cast("double") /
-          size(array_union(col("set_l"), col("set_r"))), 6).as("jaccard"))
+      .join(sets.select(col(idCol).as("id_r"), col("sh").as("set_r")), "id_r"))
       .filter(col("jaccard") >= threshold)
     // sever lineage from the store files BEFORE the append grows them
     val out = pairs.localCheckpoint(true)
     newState.join(oldState.select(col(idCol)), Seq(idCol), "left_anti")
       .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(statePath)
-    newState.unpersist(); cand.unpersist()
+    newState.unpersist()
     out
   }
 
@@ -576,16 +552,10 @@ object Dedup {
     * pairs sharing at least one shingle. */
   def ngramContainment(pairs: DataFrame, docs: DataFrame, idCol: String, textCol: String,
                        shingleK: Int, hashShingles: Boolean = true): DataFrame = {
-    val candIds = pairs.select(explode(array(col("id_l"), col("id_r"))).as(idCol)).distinct()
-    def set(c: Column): Column =
-      if (hashShingles) array_distinct(X.shingleHashes(T.normText(c), shingleK))
-      else array_distinct(T.shingles(c, shingleK))
-    val sets = docs.join(candIds, Seq(idCol), "left_semi")
-      .select(col(idCol).as("__id"), set(col(textCol)).as("__set"))
-    // same caller-materializes-pairs contract as ngramJaccard
-    pairs
-      .join(sets.select(col("__id").as("id_l"), col("__set").as("set_l")), "id_l")
-      .join(sets.select(col("__id").as("id_r"), col("__set").as("set_r")), "id_r")
+    val shingles =
+      if (hashShingles) X.shingleHashes(T.normText(col(textCol)), shingleK)
+      else T.shingles(col(textCol), shingleK)
+    pairSets(pairs, docs, idCol, shingles)
       .select(col("id_l"), col("id_r"),
         size(col("set_l")).cast("long").as("n_l"),
         size(col("set_r")).cast("long").as("n_r"),
@@ -835,9 +805,9 @@ object Dedup {
     * Shuffle carries (id, table, bucket) longs — never the vectors.
     * `planes` overrides the default Gaussian hyperplanes (the gate
     * query passes LCG-derived planes the DuckDB oracle can rebuild).
-    * Resource contract: leaves the candidate set cached — caller
-    * releases it after materializing (see [[minhashPairs]]). */
-  /** `dedupBeforeVerify`: where the cross-table duplicate-pair dedup
+    * Lazy, like [[minhashPairs]]: no job runs before an action.
+    *
+    * `dedupBeforeVerify`: where the cross-table duplicate-pair dedup
     * runs. `false` (default — right for a SELECTIVE threshold): raw
     * bucket pairs flow straight into the cosine verify and the
     * `.distinct()` runs on the filtered SURVIVORS — the duplicate cost
@@ -861,12 +831,8 @@ object Dedup {
     }
     val bucketed = df.select(col(idCol),
         posexplode(bucketCol).as(Seq("table", "bucket")))
-    // materialized so the verify joins plan against the candidate
-    // set's TRUE size (see minhashPairs — the Generate-estimate
-    // broadcast hazard)
     val cand = pairsFromBuckets(bucketed, idCol, Seq("table", "bucket"), maxBucketSize,
-      dedup = dedupBeforeVerify).cache()
-    cand.count()
+      dedup = dedupBeforeVerify)
     val vecs = df.select(col(idCol).as("__id"), col(vecCol).as("__v"))
     val verified = cand
       .join(vecs.select(col("__id").as("id_l"), col("__v").as("v_l")), "id_l")
@@ -894,9 +860,8 @@ object Dedup {
     * grow with the corpus (cells of ~10^4-10^5 docs) — the published
     * configuration uses 11k clusters for 500M docs.
     *
-    * Returns every input id: (id, cell, keep). Resource contract:
-    * leaves the candidate set cached — caller releases it after
-    * materializing (see [[minhashPairs]]). */
+    * Returns every input id: (id, cell, keep). The centroid sample is
+    * the one eager step (a driver collect); the pairs stay lazy. */
   def semDedup(emb: DataFrame, idCol: String, vecCol: String, dim: Int,
                nCentroids: Int = 16, threshold: Double = 0.4,
                maxCellSize: Int = 10000, seed: Long = 42L,
@@ -906,13 +871,11 @@ object Dedup {
     val cells = emb.select(col(idCol), col(vecCol).as("__v"),
       element_at(graft.functions.VectorExpressions.nearestCentroids(col(vecCol), flat, dim, c, 1), 1)
         .as("cell"))
-    // materialized — true-size verify-join planning (see minhashPairs).
     // dedup=false: with a SINGLE bucket column every id sits in exactly
     // one cell, so no pair can be emitted twice — the distinct was a
     // candidate-sized aggregation for nothing
     val cand = pairsFromBuckets(cells.select(col(idCol), col("cell")), idCol,
-      Seq("cell"), maxCellSize, dedup = false).cache()
-    cand.count()
+      Seq("cell"), maxCellSize, dedup = false)
     val vecs = cells.select(col(idCol).as("__id"), col("__v"))
     val dropped = cand
       .join(vecs.select(col("__id").as("id_l"), col("__v").as("v_l")), "id_l")

@@ -466,8 +466,7 @@ object Pipeline {
     // cached: three consumers (simhash pairs, keep-list, final join)
     // would otherwise re-run the quality filter + regex scrub + dedup
     // window each — the scrub regexes dominate the pipeline's cost.
-    // Session-scoped cache, same contract as Dedup's candidate caches
-    // (Bench clearCache()s between queries).
+    // Session-scoped cache (Bench clearCache()s between queries).
     val exact = cleaned
       .withColumn("__fp", md5(T.normText(col(textCol))))
       .withColumn("__rn", row_number().over(wFp))

@@ -152,10 +152,14 @@ object Similarity {
     // opposite placement from the selective-threshold dedup paths.
     val pairs = Dedup.embeddingPairs(corpus, idCol, vecCol, dim, threshold = -2.0,
       nBits, nTables, maxBucketSize, planes, dedupBeforeVerify = true)
+    // both directions from ONE read of the pairs: a union of two reads
+    // ran the verify joins and cosines twice
     val directed = pairs
-      .select(col("id_l").as("qid"), col("id_r").as("vec_id"), col("cosine").as("score"))
-      .union(pairs.select(col("id_r").as("qid"), col("id_l").as("vec_id"),
-        col("cosine").as("score")))
+      .select(explode(array(
+        struct(col("id_l").as("qid"), col("id_r").as("vec_id"), col("cosine").as("score")),
+        struct(col("id_r").as("qid"), col("id_l").as("vec_id"), col("cosine").as("score"))))
+        .as("__d"))
+      .select(col("__d.qid"), col("__d.vec_id"), col("__d.score"))
       .filter(!isnan(col("score")))
     rankTopK(directed, "vec_id", "qid", k)
   }

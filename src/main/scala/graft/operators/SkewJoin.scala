@@ -43,10 +43,9 @@ object SkewJoin {
     val hot = left.groupBy(col(key)).agg(count(lit(1)).as("__c"))
       .filter(col("__c") > hotThreshold)
       .select(col(key))
-    // tiny by construction; cached so the three consumers below cost
-    // one computation even if exchange reuse doesn't fire (session-
-    // scoped cache, same caller-clearCache contract as Dedup's)
-    val hotB = broadcast(hot.cache())
+    // tiny by construction; its three consumers share one broadcast
+    // (exchange reuse), so the key count runs once
+    val hotB = broadcast(hot)
     // salt is deterministic BY CONTENT (xxhash64 over the full row) —
     // but correctness never depends on it: every left row still meets
     // every right row with its key; the salt only picks the reducer

@@ -126,7 +126,7 @@ object StreamOps {
         // the table's OWN filesystem, not the default FS — a store on
         // s3a:///hdfs:// with a file:// default would otherwise swap
         // against the wrong scheme
-        val fs = tbl.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val fs = StoreProtocol.fsOf(spark, tablePath)
         StoreProtocol.repairSwap(fs, tbl)
         val merged =
           if (!fs.exists(tbl)) {
@@ -180,8 +180,7 @@ object StreamOps {
             spark, stateDir, batch.toDF(), idCol, textCol, nShards,
             minTokens, maxTokens, minStopwordRatio, maxRepetition,
             maxHamming, tokenHash, hashedShard)
-          val fs = new org.apache.hadoop.fs.Path(stateDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val fs = StoreProtocol.fsOf(spark, stateDir)
           val staging = new org.apache.hadoop.fs.Path(s"$stateDir/export__staging")
           export.write.mode("overwrite").parquet(staging.toString)
           StoreProtocol.swap(fs, new org.apache.hadoop.fs.Path(s"$stateDir/export"), staging)
@@ -223,8 +222,7 @@ object StreamOps {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
-          val fs = new org.apache.hadoop.fs.Path(stateDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val fs = StoreProtocol.fsOf(spark, stateDir)
           val rowsPath = new org.apache.hadoop.fs.Path(s"$stateDir/rows")
           StoreProtocol.repairSwap(fs, rowsPath)
           val slim = batch.toDF().select(col(idCol), col(stratumCol), col(tokensCol))

@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 
 /** Column <-> catalyst Expression bridge.
   *
@@ -15,6 +16,12 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataFrame over a graft-built logical plan, in `like`'s session
+    * (`Dataset.ofRows` is private[sql]) — how graft's own logical nodes
+    * enter a query. */
+  def ofRows(like: DataFrame, plan: LogicalPlan): DataFrame =
+    Dataset.ofRows(like.asInstanceOf[Dataset[_]].sparkSession, plan)
 
   /** Drain the shared listener bus so QueryExecutionListener callbacks
     * registered by graft (write-metrics row counts, Gds.withListener)

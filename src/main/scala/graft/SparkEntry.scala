@@ -5099,13 +5099,6 @@ object SparkEntry {
     edited.union(cloned).union(novel)
   }
 
-  /** Pristine corpus state for corpus_incremental_delta — built once
-    * per (session, sfDir), never incremented directly (callers copy
-    * it; the increment APPENDS to its state dir). Entries for stopped
-    * sessions are evicted on access (their temp dirs deleted — the
-    * JVM-global map must not pin dead sessions' state, the
-    * Tables.sweepStopped discipline) and every master dir is
-    * registered for recursive delete at JVM exit. */
   /** Per-run scratch directory for gates that MUTATE a copied store —
     * registered for JVM-exit deletion exactly like the session
     * masters, so a multi-pass bench run cannot leak one index/state
@@ -5116,23 +5109,17 @@ object SparkEntry {
     d.toString
   }
 
+  /** Session-master corpus state for the corpus_incremental_delta and
+    * corpus_stream gates — copied per run (the increment appends to
+    * its state dir). */
   private val corpusStateCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private def pristineCorpusState(s: SparkSession, dir: String,
-                                  docs: DataFrame): String = {
-    corpusStateCache.filterInPlace { case ((sess, _), path) =>
-      val live = !sess.sparkContext.isStopped
-      if (!live) org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
-      live
-    }
-    corpusStateCache.getOrElseUpdate((s, dir), {
-      val master = java.nio.file.Files.createTempDirectory("graft_corpus_master").toString
-      org.apache.commons.io.FileUtils.forceDeleteOnExit(new java.io.File(master))
+  private def pristineCorpusState(s: SparkSession, dir: String, docs: DataFrame): String =
+    masterStore(corpusStateCache, identity[String], "graft_corpus_master", s, dir) { master =>
       Pipeline.writeCorpusState(docs, "doc_id", "text", master, nShards = 8,
         tokenHash = Dedup.md5TokenHash, hashedShard = false)
       master
-    })
-  }
+    }
 
   /** BM25 twin of Search.bm25TopK — shared by text_bm25 and
     * text_search_indexed (the persisted-postings path); the `docsRel`

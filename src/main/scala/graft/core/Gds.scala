@@ -328,10 +328,8 @@ final case class Gds(df: DataFrame) {
       import org.apache.spark.sql.execution.QueryExecution
       import org.apache.spark.sql.util.QueryExecutionListener
       val t0 = System.nanoTime()
-      val sawSuccess = new java.util.concurrent.atomic.AtomicBoolean(false)
       val qel = new QueryExecutionListener {
-        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-          sawSuccess.set(true)
+        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = ()
         override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
           gdsListeners.foreach(_.onError(action, e))
       }

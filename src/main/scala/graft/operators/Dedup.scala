@@ -344,10 +344,15 @@ object Dedup {
     * (semi-join first): at 100 TB the candidate set is orders of
     * magnitude smaller than the corpus, so the expensive
     * shingle-materialize + the two pair-joins touch a tiny relation
-    * instead of scanning the corpus twice. */
+    * instead of scanning the corpus twice. The candidate ids are read
+    * beneath the pairs' [[FanoutBound]]: a pair relation's ids are no
+    * more than its bucketed input, which the Generate estimate already
+    * reflects, so the semi-join can still broadcast them instead of
+    * shuffling the corpus text. */
   private def pairSets(pairs: DataFrame, docs: DataFrame, idCol: String,
                        shingles: Column): DataFrame = {
-    val candIds = pairs.select(explode(array(col("id_l"), col("id_r"))).as(idCol)).distinct()
+    val candIds = FanoutBound.unbounded(pairs)
+      .select(explode(array(col("id_l"), col("id_r"))).as(idCol)).distinct()
     val sets = docs.join(candIds, Seq(idCol), "left_semi")
       .select(col(idCol).as("__id"), array_distinct(shingles).as("__set"))
     pairs

@@ -46,4 +46,10 @@ private[graft] object FanoutBound {
     if (!exp.extraStrategies.contains(Passthrough)) exp.extraStrategies = Passthrough +: exp.extraStrategies
     Bridge.ofRows(df, FanoutBound(fanout, df.queryExecution.analyzed))
   }
+
+  /** `df` with every [[FanoutBound]] in its plan removed — for a
+    * relation that the bound overstates, such as the ids of a pair
+    * relation, which are no more than its bucketed input. */
+  def unbounded(df: DataFrame): DataFrame =
+    Bridge.ofRows(df, df.queryExecution.analyzed.transformUp { case FanoutBound(_, child) => child })
 }

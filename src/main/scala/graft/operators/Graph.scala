@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Distributed graph analytics. PageRank-style propagation is how
@@ -15,25 +15,62 @@ import org.apache.spark.sql.functions._
   * bit-identical in any engine (the cluster_kmeans integer-sum
   * recipe). Truncation loses ≤out_degree units per node per step —
   * deterministic, and irrelevant at 2^40 resolution.
+  *
+  * Rounds: every iterative operator here runs its rounds through one
+  * driver, [[Rounds]] (so does [[Pipeline.bpeTrain]]). Every Spark job
+  * the operator starts carries the job description
+  * `graft.graph <op> round=<n>` (UI, listeners, `Diag stages`): the
+  * set-up jobs before the first round carry `round=0`, and the final
+  * seal carries the last round's number. The loop-invariant caches are
+  * released, and the caller's job description restored, on every exit,
+  * a throw included — a guard that raises mid-round leaves nothing
+  * cached behind.
   */
 object Graph {
 
   val TotalUnits: Long = 1L << 40
 
-  /** Round observability for the iterative operators: the per-round
-    * barrier (join + min-agg + checkpoint + probe) is the cost driver
+  /** The round loop of graft's iterative operators. The per-round
+    * barrier (join + agg + checkpoint + probe) is their cost driver
     * and the round COUNT is data-dependent (eccentricity / peeling
-    * depth), so a "sssp got slower" report needs this denominator.
-    * `loop` calls the function it is given at the start of each round;
-    * that round's jobs then carry the Spark job description
-    * `graft.graph <op> round=<n>` (UI, listeners, `Diag stages`). The
-    * caller's description is restored when the loop exits, also on a
-    * throw. */
-  private def labelRounds(df: DataFrame, op: String)(loop: (Int => Unit) => Unit): Unit = {
-    val sc = df.sparkSession.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    try loop(n => sc.setJobDescription(s"graft.graph $op round=$n"))
-    finally sc.setJobDescription(prev)
+    * depth), so each round's jobs carry `<label> round=<n>`. Relations
+    * taken through [[cache]] are the loop invariants; [[Rounds.apply]]
+    * unpersists them when the operator exits. */
+  private[operators] final class Rounds private (sc: SparkContext, label: String) {
+    private val invariants = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
+    /** `df`, cached until the operator returns or throws. */
+    def cache(df: DataFrame): DataFrame = { invariants += df; df.cache() }
+
+    /** Runs `round(1)`, `round(2)`, ... until one returns true
+      * (converged) or `maxRounds` rounds ran; true iff it converged. */
+    def loop(maxRounds: Int)(round: Int => Boolean): Boolean = {
+      var n = 0
+      var converged = false
+      while (!converged && n < maxRounds) {
+        n += 1
+        sc.setJobDescription(s"$label round=$n")
+        converged = round(n)
+      }
+      converged
+    }
+
+    /** Exactly `rounds` rounds. */
+    def repeat(rounds: Int)(round: Int => Unit): Unit = loop(rounds) { n => round(n); false }
+  }
+
+  private[operators] object Rounds {
+    /** Runs `body` with its jobs labelled `<label> round=0` until its
+      * first round; restores the caller's job description and releases
+      * the invariants on every exit. */
+    def apply[T](like: DataFrame, label: String)(body: Rounds => T): T = {
+      val sc = like.sparkSession.sparkContext
+      val prev = sc.getLocalProperty("spark.job.description")
+      val r = new Rounds(sc, label)
+      sc.setJobDescription(s"$label round=0")
+      try body(r)
+      finally { r.invariants.foreach(_.unpersist()); sc.setJobDescription(prev) }
+    }
   }
 
   /** PageRank over a directed edge list. Every node must have at
@@ -85,98 +122,96 @@ object Graph {
             col(c).cast("string"))).cast("long")).otherwise(wc)
       case None => lit(1L)
     }
-    // Loop invariants, cached once (in-memory cache, not
-    // localCheckpoint: the blocking checkpoint write cost more than it
-    // saved at bench scale, while the cache is free on first use).
-    // Without the edge cache every iteration re-executes the upstream
-    // lineage (the gate query's fact-fact join ran 8× for 2
-    // iterations).
-    // Pre-partitioned on __src BEFORE caching: the per-iteration
-    // contrib join then consumes the cached layout directly instead of
-    // re-shuffling the edge relation every iteration — one upfront
-    // exchange buys back an edge-sized exchange × iters (measured 30%
-    // off 2-iter and 10-iter wall time at sf0.1, and the saving grows
-    // with iteration count). The degree aggregate reuses the same
-    // layout for free (already partitioned on its grouping key).
-    val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
-        w.as("__w"))
-      .repartition(col("__src"))
-      .cache()
-    // out-weights double as the node relation (every node has out-edges)
-    val deg = e.groupBy(col("__src").as("node"))
-      .agg(sum(col("__w")).as("__deg"))
-    val n = deg.select(count(lit(1)).as("__n"))
-    // nodes = (node, __deg, __n): the cached node-sized rebuild
-    // skeleton. Every iteration rebuilds ranks from nodes ⟕ contrib —
-    // NOT from the previous ranks — so ranks_i appears exactly ONCE in
-    // ranks_{i+1}'s plan (inside contrib) and lineage depth stays
-    // LINEAR in iters. (The previous shape joined old ranks twice per
-    // iteration — contrib and the rebuild — doubling the
-    // unmaterialized plan every step: 2^k recompute between
-    // checkpoints at production iteration counts.) base teleport share
-    // = (3·T div 20) div N, derived per row from the broadcast count.
-    // Personalized variant: nodes additionally carries (__seed, __ns)
-    // and the init/teleport expressions target the seed rows only —
-    // the per-iteration plan (and its cost) is otherwise unchanged.
-    val nodes = seeds match {
-      case None => deg.crossJoin(broadcast(n)).cache()
-      case Some(s) =>
-        // evaluated per seed row via the sum: a seed without out-edges
-        // raises instead of silently leaking its teleport mass
-        val ns = s.join(deg, Seq("node"), "left")
-          .select(when(col("__deg").isNull,
-            raise_error(concat(lit("personalizedPagerank: seed has no out-edges: "),
-              col("node").cast("string"))).cast("long"))
-            .otherwise(lit(1L)).as("__one"))
-          // sum over an EMPTY seed relation is NULL — without this
-          // guard every teleport share would silently take the
-          // non-seed 0 branch and the operator would return all-zero
-          // ranks (100% mass leak), the exact contract violation the
-          // per-row guard above exists to prevent
-          .agg(coalesce(sum(col("__one")),
-            raise_error(lit("personalizedPagerank: seed set is empty")).cast("long"))
-            .as("__ns"))
-        deg.crossJoin(broadcast(n))
-          .join(s.withColumn("__seed", lit(1L)), Seq("node"), "left")
-          .crossJoin(broadcast(ns)).cache()
+    Rounds(edges, s"graft.graph ${if (seeds.isEmpty) "pagerank" else "ppr"}") { r =>
+      // Loop invariants, cached once (in-memory cache, not
+      // localCheckpoint: the blocking checkpoint write cost more than it
+      // saved at bench scale, while the cache is free on first use).
+      // Without the edge cache every iteration re-executes the upstream
+      // lineage (the gate query's fact-fact join ran 8× for 2
+      // iterations).
+      // Pre-partitioned on __src BEFORE caching: the per-iteration
+      // contrib join then consumes the cached layout directly instead of
+      // re-shuffling the edge relation every iteration — one upfront
+      // exchange buys back an edge-sized exchange × iters (measured 30%
+      // off 2-iter and 10-iter wall time at sf0.1, and the saving grows
+      // with iteration count). The degree aggregate reuses the same
+      // layout for free (already partitioned on its grouping key).
+      val e = r.cache(edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
+          w.as("__w"))
+        .repartition(col("__src")))
+      // out-weights double as the node relation (every node has out-edges)
+      val deg = e.groupBy(col("__src").as("node"))
+        .agg(sum(col("__w")).as("__deg"))
+      val n = deg.select(count(lit(1)).as("__n"))
+      // nodes = (node, __deg, __n): the cached node-sized rebuild
+      // skeleton. Every iteration rebuilds ranks from nodes ⟕ contrib —
+      // NOT from the previous ranks — so ranks_i appears exactly ONCE in
+      // ranks_{i+1}'s plan (inside contrib) and lineage depth stays
+      // LINEAR in iters. (The previous shape joined old ranks twice per
+      // iteration — contrib and the rebuild — doubling the
+      // unmaterialized plan every step: 2^k recompute between
+      // checkpoints at production iteration counts.) base teleport share
+      // = (3·T div 20) div N, derived per row from the broadcast count.
+      // Personalized variant: nodes additionally carries (__seed, __ns)
+      // and the init/teleport expressions target the seed rows only —
+      // the per-iteration plan (and its cost) is otherwise unchanged.
+      val nodes = r.cache(seeds match {
+        case None => deg.crossJoin(broadcast(n))
+        case Some(s) =>
+          // evaluated per seed row via the sum: a seed without out-edges
+          // raises instead of silently leaking its teleport mass
+          val ns = s.join(deg, Seq("node"), "left")
+            .select(when(col("__deg").isNull,
+              raise_error(concat(lit("personalizedPagerank: seed has no out-edges: "),
+                col("node").cast("string"))).cast("long"))
+              .otherwise(lit(1L)).as("__one"))
+            // sum over an EMPTY seed relation is NULL — without this
+            // guard every teleport share would silently take the
+            // non-seed 0 branch and the operator would return all-zero
+            // ranks (100% mass leak), the exact contract violation the
+            // per-row guard above exists to prevent
+            .agg(coalesce(sum(col("__one")),
+              raise_error(lit("personalizedPagerank: seed set is empty")).cast("long"))
+              .as("__ns"))
+          deg.crossJoin(broadcast(n))
+            .join(s.withColumn("__seed", lit(1L)), Seq("node"), "left")
+            .crossJoin(broadcast(ns))
+      })
+      val carry = Seq(col("node"), col("__deg"), col("__n")) ++
+        (if (seeds.isDefined) Seq(col("__ns"), col("__seed")) else Nil)
+      def initExpr = seeds match {
+        case None => expr(s"${TotalUnits}L div __n")
+        case Some(_) => when(col("__seed").isNotNull,
+          expr(s"${TotalUnits}L div __ns")).otherwise(lit(0L))
+      }
+      def teleportExpr = seeds match {
+        case None => expr(s"(3 * ${TotalUnits}L div 20) div __n")
+        case Some(_) => when(col("__seed").isNotNull,
+          expr(s"(3 * ${TotalUnits}L div 20) div __ns")).otherwise(lit(0L))
+      }
+      var ranks = nodes.select(carry :+ initExpr.as("__r"): _*)
+      r.repeat(iters) { i =>
+        val contrib = e
+          .join(ranks, col("__src") === col("node"))
+          .groupBy(col("__dst"))
+          .agg(sum(expr("(__r * __w) div __deg")).as("__s"))
+        ranks = nodes.join(contrib, col("node") === col("__dst"), "left_outer")
+          .select(carry :+
+            (teleportExpr + expr("17 * coalesce(__s, 0L) div 20")).as("__r"): _*)
+        // bound planning cost for long runs (lineage is linear now, so
+        // this is plan-SIZE hygiene, not a recompute guard); short runs
+        // skip the (blocking) checkpoint barrier entirely. Every 5th, not
+        // every 10th: a 20-iteration sf0.1 run took 5.26 s vs 6.25 s
+        // (median of 3, 4 cores, generated classes already cached), so
+        // planning a longer unsealed plan costs more than the extra barrier
+        if (i % 5 == 0 && i < iters) ranks = ranks.localCheckpoint()
+      }
+      // materialize the final ranks (node-count rows — cheap) so the
+      // operator's caches can be dropped before returning: the caller
+      // gets a checkpoint-backed relation with no live cache behind it
+      val out = ranks.select(col("node"), col("__r").as("rank"))
+      if (iters == 0) out else out.localCheckpoint()
     }
-    val carry = Seq(col("node"), col("__deg"), col("__n")) ++
-      (if (seeds.isDefined) Seq(col("__ns"), col("__seed")) else Nil)
-    def initExpr = seeds match {
-      case None => expr(s"${TotalUnits}L div __n")
-      case Some(_) => when(col("__seed").isNotNull,
-        expr(s"${TotalUnits}L div __ns")).otherwise(lit(0L))
-    }
-    def teleportExpr = seeds match {
-      case None => expr(s"(3 * ${TotalUnits}L div 20) div __n")
-      case Some(_) => when(col("__seed").isNotNull,
-        expr(s"(3 * ${TotalUnits}L div 20) div __ns")).otherwise(lit(0L))
-    }
-    var ranks = nodes.select(carry :+ initExpr.as("__r"): _*)
-    for (i <- 1 to iters) {
-      val contrib = e
-        .join(ranks, col("__src") === col("node"))
-        .groupBy(col("__dst"))
-        .agg(sum(expr("(__r * __w) div __deg")).as("__s"))
-      ranks = nodes.join(contrib, col("node") === col("__dst"), "left_outer")
-        .select(carry :+
-          (teleportExpr + expr("17 * coalesce(__s, 0L) div 20")).as("__r"): _*)
-      // bound planning cost for long runs (lineage is linear now, so
-      // this is plan-SIZE hygiene, not a recompute guard); short runs
-      // skip the (blocking) checkpoint barrier entirely. Every 5th, not
-      // every 10th: a 20-iteration sf0.1 run took 5.26 s vs 6.25 s
-      // (median of 3, 4 cores, generated classes already cached), so
-      // planning a longer unsealed plan costs more than the extra barrier
-      if (i % 5 == 0 && i < iters) ranks = ranks.localCheckpoint()
-    }
-    // materialize the final ranks (node-count rows — cheap) so the
-    // operator's caches can be dropped before returning: the caller
-    // gets a checkpoint-backed relation with no live cache behind it
-    val out = ranks.select(col("node"), col("__r").as("rank"))
-    if (iters == 0) { e.unpersist(); nodes.unpersist(); return out }
-    val sealed0 = out.localCheckpoint()
-    e.unpersist(); nodes.unpersist()
-    sealed0
   }
 
   /** Label propagation (community detection): every node starts as its
@@ -194,28 +229,28 @@ object Graph {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    // same pre-partitioned-edge-cache trick as pagerank: the
-    // per-iteration counts join reads the cached __src layout
-    val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .repartition(col("__src")).cache()
-    var labels = e.select(col("__src").as("node")).distinct()
-      .withColumn("label", col("node"))
-    for (i <- 1 to iters) {
-      val counts = e.join(labels, col("__src") === col("node"))
-        .groupBy(col("__dst"), col("label")).agg(count(lit(1)).as("__c"))
-      // adopt = argmax by (count, −label): max_by over a lexicographic
-      // struct is a partial-aggregatable AGGREGATE — a per-dst
-      // row_number window costs a full shuffle+sort of the
-      // neighbor-label relation instead (measured 2× slower)
-      labels = counts.groupBy(col("__dst").as("node"))
-        .agg(max_by(col("label"), struct(col("__c"), (-col("label")).as("__nl"))).as("label"))
-      if (i % 5 == 0 && i < iters) labels = labels.localCheckpoint()
+    Rounds(edges, "graft.graph labelprop") { r =>
+      // same pre-partitioned-edge-cache trick as pagerank: the
+      // per-iteration counts join reads the cached __src layout
+      val e = r.cache(edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
+        .repartition(col("__src")))
+      var labels = e.select(col("__src").as("node")).distinct()
+        .withColumn("label", col("node"))
+      r.repeat(iters) { i =>
+        val counts = e.join(labels, col("__src") === col("node"))
+          .groupBy(col("__dst"), col("label")).agg(count(lit(1)).as("__c"))
+        // adopt = argmax by (count, −label): max_by over a lexicographic
+        // struct is a partial-aggregatable AGGREGATE — a per-dst
+        // row_number window costs a full shuffle+sort of the
+        // neighbor-label relation instead (measured 2× slower)
+        labels = counts.groupBy(col("__dst").as("node"))
+          .agg(max_by(col("label"), struct(col("__c"), (-col("label")).as("__nl"))).as("label"))
+        if (i % 5 == 0 && i < iters) labels = labels.localCheckpoint()
+      }
+      // node-sized final relation: materialize eagerly so the edge cache
+      // can be dropped before returning (same contract as pagerank)
+      labels.localCheckpoint()
     }
-    // node-sized final relation: materialize eagerly so the edge cache
-    // can be dropped before returning (same contract as pagerank)
-    val out = labels.localCheckpoint()
-    e.unpersist()
-    out
   }
 
   /** Connected components over an undirected edge list: every node is
@@ -251,22 +286,18 @@ object Graph {
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
                           maxRounds: Int = 20): DataFrame = {
     require(maxRounds >= 1, "maxRounds must be >= 1")
-    val sym = edges
-      .select(col(aCol).as("__src"), col(bCol).as("__dst"))
-      .union(edges.select(col(bCol).as("__src"), col(aCol).as("__dst")))
-      .filter(col("__src") =!= col("__dst"))
-      .distinct()
-      .repartition(col("__dst"))
-      .cache()
-    // seed: min(self, direct neighbors) — one round of flooding for free
-    var labels = sym.groupBy(col("__src").as("node"))
-      .agg(least(min(col("__dst")), first(col("__src"))).as("component"))
-      .localCheckpoint()
-    var converged = false
-    var round = 0
-    labelRounds(edges, "concomp") { startRound =>
-      while (!converged && round < maxRounds) {
-        startRound(round + 1)
+    Rounds(edges, "graft.graph concomp") { r =>
+      val sym = r.cache(edges
+        .select(col(aCol).as("__src"), col(bCol).as("__dst"))
+        .union(edges.select(col(bCol).as("__src"), col(aCol).as("__dst")))
+        .filter(col("__src") =!= col("__dst"))
+        .distinct()
+        .repartition(col("__dst")))
+      // seed: min(self, direct neighbors) — one round of flooding for free
+      var labels = sym.groupBy(col("__src").as("node"))
+        .agg(least(min(col("__dst")), first(col("__src"))).as("component"))
+        .localCheckpoint()
+      val converged = r.loop(maxRounds) { _ =>
         val neighborMin = sym.join(labels, col("__dst") === col("node"))
           .groupBy(col("__src").as("node"))
           .agg(min(col("component")).as("__nmin"))
@@ -283,17 +314,15 @@ object Graph {
           .join(labels.withColumnRenamed("component", "__old"), "node")
           .filter(col("component") =!= col("__old")).limit(1).count()
         labels = updated
-        converged = changed == 0L
-        round += 1
+        changed == 0L
       }
+      if (!converged)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxRounds rounds — a component " +
+            s"with diameter > $maxRounds exists; raise maxRounds (propagation is one " +
+            "hop per round)")
+      labels
     }
-    sym.unpersist()
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds — a component " +
-          s"with diameter > $maxRounds exists; raise maxRounds (propagation is one " +
-          "hop per round)")
-    labels
   }
 
   /** Multi-source BFS: shortest hop distance from a seed set, over a
@@ -304,70 +333,22 @@ object Graph {
     * join-chain lookups; this is the hop-count variant of
     * connectedComponents' flooding.
     *
-    * Algorithm: synchronous distance flooding — each round every node
-    * adopts min(own dist, min over in-neighbors' dist + 1), so the
-    * frontier advances one hop per round and the round count is the
-    * graph's seed eccentricity (max shortest-path dist), NOT node
-    * count. Convergence-probed like connectedComponents; THROWS on
-    * round exhaustion rather than return truncated distances.
-    *
-    * Scale shape per round: one edges⋈dist equi-join on the cached
-    * pre-partitioned edge layout + one partial-agg'd min groupBy; the
-    * dist relation is one (long, long) row per REACHED node (grows
-    * monotonically to the reachable set, never the full graph).
-    * Rounds are sealed by an eager localCheckpoint — the round
-    * references the previous dist three times (propagate, merge,
-    * probe), so a cache would leave the logical plan tripling per
-    * round (the connectedComponents 3^k lesson). Shuffles carry id/
-    * dist longs only.
+    * Algorithm: [[sssp]]'s min-plus flood with every weight 1 and no
+    * cost budget — the hop count IS the unit-weight distance, and the
+    * weight min over parallel edges is the edge distinct. The frontier
+    * advances one hop per round, so the round count is the graph's
+    * seed eccentricity (max shortest-path dist), NOT node count.
+    * THROWS on round exhaustion rather than return truncated
+    * distances.
     *
     * Output: (node, dist) for every node reachable from a seed
     * (seeds themselves at dist 0, present even if edge-less). */
   def bfs(edges: DataFrame, srcCol: String, dstCol: String,
           seeds: DataFrame, seedCol: String,
-          maxRounds: Int = 20): DataFrame = {
-    require(maxRounds >= 1, "maxRounds must be >= 1")
-    val e = edges
-      .select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .filter(col("__src") =!= col("__dst"))
-      .distinct()
-      .repartition(col("__src"))
-      .cache()
-    var dist = seeds.select(col(seedCol).as("node")).distinct()
-      .withColumn("dist", lit(0L))
-      .localCheckpoint()
-    var converged = false
-    var round = 0
-    labelRounds(edges, "bfs") { startRound =>
-      while (!converged && round < maxRounds) {
-        startRound(round + 1)
-        val prop = e.join(dist, col("__src") === col("node"))
-          .groupBy(col("__dst").as("__nn"))
-          .agg(min(col("dist") + 1L).as("__nd"))
-        // full outer merge: newly-reached nodes enter, known nodes keep
-        // min(old, propagated); seeds stay at 0 by the min
-        val updated = dist
-          .join(prop, col("node") === col("__nn"), "full_outer")
-          .select(coalesce(col("node"), col("__nn")).as("node"),
-            least(coalesce(col("dist"), col("__nd")),
-              coalesce(col("__nd"), col("dist"))).as("dist"))
-          .localCheckpoint()
-        val changed = updated
-          .join(dist.withColumnRenamed("dist", "__old"), Seq("node"), "left_outer")
-          .filter(col("__old").isNull || col("dist") =!= col("__old"))
-          .limit(1).count()
-        dist = updated
-        converged = changed == 0L
-        round += 1
-      }
-    }
-    e.unpersist()
-    if (!converged)
-      throw new IllegalStateException(
-        s"bfs did not converge in $maxRounds rounds — a shortest path longer than " +
-          s"$maxRounds hops exists; raise maxRounds (the frontier advances one hop per round)")
-    dist
-  }
+          maxRounds: Int = 20): DataFrame =
+    flood("bfs", edges, srcCol, dstCol, lit(1L), seeds, seedCol, Long.MaxValue, maxRounds)(
+      s"bfs did not converge in $maxRounds rounds — a shortest path longer than " +
+        s"$maxRounds hops exists; raise maxRounds (the frontier advances one hop per round)")
 
   /** Multi-source single-source-shortest-paths over POSITIVE integer
     * edge weights (min-plus flooding — the weighted generalization of
@@ -381,9 +362,14 @@ object Graph {
     * keeps a DuckDB recursive-CTE oracle finite. THROWS on round
     * exhaustion rather than return non-converged distances.
     *
-    * Scale shape: identical to [[bfs]] — per round one equi-join on
-    * the cached pre-partitioned edge layout + one partial-agg'd min
-    * groupBy, rounds sealed by eager localCheckpoint, shuffles carry
+    * Scale shape per round: one edges⋈dist equi-join on the cached
+    * pre-partitioned edge layout + one partial-agg'd min groupBy; the
+    * dist relation is one (long, long) row per REACHED node (grows
+    * monotonically to the reachable set, never the full graph).
+    * Rounds are sealed by an eager localCheckpoint — the round
+    * references the previous dist three times (propagate, merge,
+    * probe), so a cache would leave the logical plan tripling per
+    * round (the connectedComponents 3^k lesson). Shuffles carry
     * (id, dist) longs. Weights are guarded per-row (w ≥ 1, codegen'd
     * raise_error — a zero/negative weight would loop or corrupt the
     * fixed point silently).
@@ -392,31 +378,40 @@ object Graph {
   def sssp(edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
            seeds: DataFrame, seedCol: String,
            maxCost: Long = Long.MaxValue, maxRounds: Int = 30): DataFrame = {
-    require(maxRounds >= 1, "maxRounds must be >= 1")
     require(maxCost >= 0, "maxCost must be >= 0")
     val wc = col(weightCol).cast("long")
     val w = when(wc.isNull || wc <= 0L,
       raise_error(concat(lit("sssp: weight must be a positive integer: "),
         col(weightCol).cast("string"))).cast("long")).otherwise(wc)
-    val e = edges
-      .select(col(srcCol).as("__src"), col(dstCol).as("__dst"), w.as("__w"))
-      .filter(col("__src") =!= col("__dst"))
-      .groupBy(col("__src"), col("__dst")).agg(min(col("__w")).as("__w"))
-      .repartition(col("__src"))
-      .cache()
-    var dist = seeds.select(col(seedCol).as("node")).distinct()
-      .withColumn("dist", lit(0L))
-      .localCheckpoint()
-    var converged = false
-    var round = 0
-    labelRounds(edges, "sssp") { startRound =>
-      while (!converged && round < maxRounds) {
-        startRound(round + 1)
+    flood("sssp", edges, srcCol, dstCol, w, seeds, seedCol, maxCost, maxRounds)(
+      s"sssp did not converge in $maxRounds rounds — a shortest path with more than " +
+        s"$maxRounds edges exists inside the cost budget; raise maxRounds")
+  }
+
+  /** The min-plus flood behind [[bfs]] and [[sssp]]: edge weight `w`,
+    * parallel edges at their min weight, throwing `exhausted` when
+    * `maxRounds` rounds do not converge. */
+  private def flood(op: String, edges: DataFrame, srcCol: String, dstCol: String, w: Column,
+                    seeds: DataFrame, seedCol: String, maxCost: Long, maxRounds: Int)
+                   (exhausted: => String): DataFrame = {
+    require(maxRounds >= 1, "maxRounds must be >= 1")
+    Rounds(edges, s"graft.graph $op") { r =>
+      val e = r.cache(edges
+        .select(col(srcCol).as("__src"), col(dstCol).as("__dst"), w.as("__w"))
+        .filter(col("__src") =!= col("__dst"))
+        .groupBy(col("__src"), col("__dst")).agg(min(col("__w")).as("__w"))
+        .repartition(col("__src")))
+      var dist = seeds.select(col(seedCol).as("node")).distinct()
+        .withColumn("dist", lit(0L))
+        .localCheckpoint()
+      val converged = r.loop(maxRounds) { _ =>
         val prop = e.join(dist, col("__src") === col("node"))
           .select(col("__dst"), (col("dist") + col("__w")).as("__cand"))
           .filter(col("__cand") <= maxCost)
           .groupBy(col("__dst").as("__nn"))
           .agg(min(col("__cand")).as("__nd"))
+        // full outer merge: newly-reached nodes enter, known nodes keep
+        // min(old, propagated); seeds stay at 0 by the min
         val updated = dist
           .join(prop, col("node") === col("__nn"), "full_outer")
           .select(coalesce(col("node"), col("__nn")).as("node"),
@@ -428,16 +423,11 @@ object Graph {
           .filter(col("__old").isNull || col("dist") =!= col("__old"))
           .limit(1).count()
         dist = updated
-        converged = changed == 0L
-        round += 1
+        changed == 0L
       }
+      if (!converged) throw new IllegalStateException(exhausted)
+      dist
     }
-    e.unpersist()
-    if (!converged)
-      throw new IllegalStateException(
-        s"sssp did not converge in $maxRounds rounds — a shortest path with more than " +
-          s"$maxRounds edges exists inside the cost budget; raise maxRounds")
-    dist
   }
 
   /** Exact triangle count via degree-ordered orientation. Each
@@ -501,37 +491,32 @@ object Graph {
             maxRounds: Int = 8): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(maxRounds >= 1, "maxRounds must be >= 1")
-    var e = edges
-      .select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-      .filter(col("__src") =!= col("__dst"))
-      .distinct()
-      .repartition(col("__src"))
-      .localCheckpoint()
-    var eCount = e.count()
-    var converged = false
-    var round = 0
-    labelRounds(edges, "kcore") { startRound =>
-      while (!converged && round < maxRounds) {
-        startRound(round + 1)
+    Rounds(edges, "graft.graph kcore") { r =>
+      var e = edges
+        .select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
+        .filter(col("__src") =!= col("__dst"))
+        .distinct()
+        .repartition(col("__src"))
+        .localCheckpoint()
+      var eCount = e.count()
+      val converged = r.loop(maxRounds) { _ =>
         val alive = e.groupBy(col("__src")).agg(count(lit(1)).as("__deg"))
           .filter(col("__deg") >= k)
           .select(col("__src").as("__a"))
           .localCheckpoint()
-        val ne = e
+        e = e
           .join(alive, col("__src") === col("__a"), "left_semi")
           .join(alive.withColumnRenamed("__a", "__b"), col("__dst") === col("__b"), "left_semi")
           .localCheckpoint()
-        val nc = ne.count()
-        converged = nc == eCount
-        e = ne
-        eCount = nc
-        round += 1
+        val before = eCount
+        eCount = e.count()
+        eCount == before
       }
+      if (!converged)
+        throw new IllegalStateException(
+          s"kcore did not converge in $maxRounds rounds — peeling is still removing " +
+            "nodes; raise maxRounds")
+      e.groupBy(col("__src").as("node")).agg(count(lit(1)).as("core_degree"))
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"kcore did not converge in $maxRounds rounds — peeling is still removing " +
-          "nodes; raise maxRounds")
-    e.groupBy(col("__src").as("node")).agg(count(lit(1)).as("core_degree"))
   }
 }

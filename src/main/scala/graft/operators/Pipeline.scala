@@ -1042,7 +1042,9 @@ object Pipeline {
     * Words are tokenized by [[graft.functions.TextFunctions.tokens]];
     * end-of-word is implicit (pairs never cross word boundaries).
     * Stops early when no pair remains. Deterministic: argmax ranks
-    * (count DESC, left ASC, right ASC).
+    * (count DESC, left ASC, right ASC). Rounds run through
+    * [[Graph.Rounds]]: round n's jobs carry `graft.bpeTrain round=<n>`,
+    * the vocabulary build `round=0`.
     *
     * Output: (rank, left, right, merged, pair_count) — ≤ `merges`
     * rows in rule order. */
@@ -1051,46 +1053,46 @@ object Pipeline {
     require(merges >= 1, "merges must be >= 1")
     val spark = docs.sparkSession
     import spark.implicits._
-    var vocab = docs.select(explode(T.tokens(col(textCol))).as("__w"))
-      .groupBy(col("__w")).agg(count(lit(1)).as("__f"))
-      .filter(length(col("__w")).between(2, maxWordLen))
-      .select(col("__f"),
-        expr("transform(sequence(1, length(__w)), i -> substring(__w, i, 1))").as("__s"))
-      .localCheckpoint()
-    val rules = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-    var exhausted = false
-    var round = 1
-    while (round <= merges && !exhausted) {
-      val top = vocab
-        .select(col("__f"), explode(expr(
-          "transform(sequence(1, size(__s) - 1), i -> struct(__s[i-1] AS l, __s[i] AS r))")).as("__p"))
-        .groupBy(col("__p.l").as("l"), col("__p.r").as("r"))
-        .agg(sum(col("__f")).as("c"))
-        .orderBy(col("c").desc, col("l").asc, col("r").asc)
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        rules += ((round, l, r, l + r, c))
-        // greedy left-to-right merge as a map-side fold; Column-built
-        // lambda (never SQL-string-interpolated — symbols may contain
-        // quotes/backslashes)
-        val lLit = lit(l); val rLit = lit(r)
-        val merged = vocab.select(col("__f"),
-            aggregate(col("__s"), array().cast("array<string>"), (acc, s) =>
-              // try_element_at: NULL (not an ANSI index error) on the
-              // empty accumulator; NULL === l is NULL → otherwise branch
-              when(try_element_at(acc, lit(-1)) === lLit && s === rLit,
-                concat(slice(acc, lit(1), size(acc) - 1), array(concat(lLit, rLit))))
-                .otherwise(concat(acc, array(s)))).as("__s"))
-          .filter(size(col("__s")) >= 2) // fully-merged words pair no more
-          .localCheckpoint() // eager: materializes AND severs the fold tower
-        vocab = merged
-        round += 1
+    Graph.Rounds(docs, "graft.bpeTrain") { rounds =>
+      var vocab = docs.select(explode(T.tokens(col(textCol))).as("__w"))
+        .groupBy(col("__w")).agg(count(lit(1)).as("__f"))
+        .filter(length(col("__w")).between(2, maxWordLen))
+        .select(col("__f"),
+          expr("transform(sequence(1, length(__w)), i -> substring(__w, i, 1))").as("__s"))
+        .localCheckpoint()
+      val rules = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
+      // a round with no pair left to merge ends the loop early
+      rounds.loop(merges) { round =>
+        val top = vocab
+          .select(col("__f"), explode(expr(
+            "transform(sequence(1, size(__s) - 1), i -> struct(__s[i-1] AS l, __s[i] AS r))")).as("__p"))
+          .groupBy(col("__p.l").as("l"), col("__p.r").as("r"))
+          .agg(sum(col("__f")).as("c"))
+          .orderBy(col("c").desc, col("l").asc, col("r").asc)
+          .limit(1).collect()
+        if (top.isEmpty) true
+        else {
+          val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+          rules += ((round, l, r, l + r, c))
+          // greedy left-to-right merge as a map-side fold; Column-built
+          // lambda (never SQL-string-interpolated — symbols may contain
+          // quotes/backslashes)
+          val lLit = lit(l); val rLit = lit(r)
+          vocab = vocab.select(col("__f"),
+              aggregate(col("__s"), array().cast("array<string>"), (acc, s) =>
+                // try_element_at: NULL (not an ANSI index error) on the
+                // empty accumulator; NULL === l is NULL → otherwise branch
+                when(try_element_at(acc, lit(-1)) === lLit && s === rLit,
+                  concat(slice(acc, lit(1), size(acc) - 1), array(concat(lLit, rLit))))
+                  .otherwise(concat(acc, array(s)))).as("__s"))
+            .filter(size(col("__s")) >= 2) // fully-merged words pair no more
+            .localCheckpoint() // eager: materializes AND severs the fold tower
+          false
+        }
       }
+      spark.createDataset(rules.toSeq)
+        .toDF("rank", "left", "right", "merged", "pair_count")
     }
-    spark.createDataset(rules.toSeq)
-      .toDF("rank", "left", "right", "merged", "pair_count")
   }
 
   /** Importance-weighted Bernoulli sampling: keep row i with

@@ -322,16 +322,25 @@ object StreamOps {
     * optimization; state-free beyond the checkpoint bookkeeping. */
   def embeddingDriftStream(updates: DataFrame, baseline: DataFrame,
                            vecCol: String, outPath: String, checkpoint: String)
+      : DataStreamWriter[org.apache.spark.sql.Row] =
+    driftStream(updates, baseline, outPath, checkpoint)(
+      graft.operators.Quality.embeddingDrift(_, _, vecCol))
+
+  /** The drift monitors' shared body: `baseline` is sealed once
+    * (localCheckpoint — it is small), then every non-empty micro-batch
+    * is scored against it, tagged with its batch_id and appended to
+    * `outPath`. */
+  private def driftStream(updates: DataFrame, baseline: DataFrame, outPath: String,
+                          checkpoint: String)(score: (DataFrame, DataFrame) => DataFrame)
       : DataStreamWriter[org.apache.spark.sql.Row] = {
     val sealedBaseline = baseline.localCheckpoint(true)
     updates.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Quality.embeddingDrift(sealedBaseline, batch.toDF(), vecCol)
+        if (!batch.isEmpty)
+          score(sealedBaseline, batch.toDF())
             .withColumn("batch_id", lit(id))
             .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outPath)
-        }
         ()
       }
   }
@@ -351,21 +360,11 @@ object StreamOps {
     * only streaming state is the checkpoint's file bookkeeping. */
   def profileDriftStream(updates: DataFrame, baselineProfile: DataFrame,
                          cols: Seq[String], outPath: String, checkpoint: String,
-                         exactDistinct: Boolean = false): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val sealedBaseline = baselineProfile.localCheckpoint(true) // m rows, computed once
-    updates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Quality
-            .driftFromProfiles(sealedBaseline,
-              graft.operators.Quality.profileNumeric(batch.toDF(), cols, exactDistinct))
-            .withColumn("batch_id", lit(id))
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outPath)
-        }
-        ()
-      }
-  }
+                         exactDistinct: Boolean = false): DataStreamWriter[org.apache.spark.sql.Row] =
+    driftStream(updates, baselineProfile, outPath, checkpoint) { (base, batch) =>
+      graft.operators.Quality.driftFromProfiles(base,
+        graft.operators.Quality.profileNumeric(batch, cols, exactDistinct))
+    }
 
   /** Streaming script/PII-composition monitor — the content sibling of
     * [[profileDriftStream]] (that one watches numeric columns; this
@@ -385,21 +384,11 @@ object StreamOps {
     * (spec-pinned, the profileDriftStream contract). */
   def contentDriftStream(updates: DataFrame, baselineProfile: DataFrame,
                          textCol: String, outPath: String, checkpoint: String)
-      : DataStreamWriter[org.apache.spark.sql.Row] = {
-    val sealedBaseline = baselineProfile.localCheckpoint(true) // metric rows, computed once
-    updates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Quality
-            .contentDriftFromProfiles(sealedBaseline,
-              graft.operators.Quality.contentProfile(batch.toDF(), textCol))
-            .withColumn("batch_id", lit(id))
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outPath)
-        }
-        ()
-      }
-  }
+      : DataStreamWriter[org.apache.spark.sql.Row] =
+    driftStream(updates, baselineProfile, outPath, checkpoint) { (base, batch) =>
+      graft.operators.Quality.contentDriftFromProfiles(base,
+        graft.operators.Quality.contentProfile(batch, textCol))
+    }
 
   /** One typed SCD2 change-stream event. */
   final case class Scd2Event(key: Long, state: Option[String],

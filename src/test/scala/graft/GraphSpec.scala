@@ -1,7 +1,9 @@
 package graft
 
 import graft.operators.Graph
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -252,5 +254,91 @@ class GraphSpec extends SparkSpec {
     val r1 = base + 17 * (t / 2) / 20
     val want = base + 17 * r1 / 20
     assert(r(7L) == want)
+  }
+
+  /** The job description of every Spark job `f` starts, whether `f`
+    * returns or throws, and the caller's description seen after it. */
+  private def roundLabels(f: => Any): (Seq[String], String) = {
+    val sc = spark.sparkContext
+    val group = s"graph-rounds-${System.nanoTime()}"
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          labels.add(String.valueOf(j.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "caller") // also sets the caller's job description
+    try {
+      try f catch { case _: Exception => () }
+      val after = sc.getLocalProperty("spark.job.description")
+      Bridge.drainListenerBus(sc)
+      (scala.jdk.CollectionConverters.IterableHasAsScala(labels).asScala.toSeq, after)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("every job an iterative operator starts carries its round label; the caller's description returns") {
+    val edges = bidirect(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))).repartition(2)
+    val weighted = edges.withColumn("w", lit(2L))
+    val seeds = Seq(1L).toDF("id").repartition(2)
+    val path = (0L until 12L).map(i => (i, i + 1)).toDF("src", "dst").repartition(2)
+    val docs = Seq((1L, "low lower lowest"), (2L, "newer newest wider")).toDF("id", "text")
+    val runs: Seq[(String, () => Any)] = Seq(
+      "graph pagerank" -> (() => Graph.pagerank(edges, "src", "dst", iters = 6)),
+      "graph ppr" -> (() => Graph.personalizedPagerank(edges, "src", "dst", seeds, "id", iters = 6)),
+      "graph labelprop" -> (() => Graph.labelPropagation(edges, "src", "dst", iters = 6)),
+      "graph concomp" -> (() => Graph.connectedComponents(edges, "src", "dst")),
+      "graph bfs" -> (() => Graph.bfs(edges, "src", "dst", seeds, "id")),
+      "graph sssp" -> (() => Graph.sssp(weighted, "src", "dst", "w", seeds, "id")),
+      "graph kcore" -> (() => Graph.kcore(edges, "src", "dst", k = 2)),
+      // throws: round exhaustion, and a guard raised inside a round
+      "graph concomp" -> (() => Graph.connectedComponents(path, "src", "dst", maxRounds = 2)),
+      "graph sssp" -> (() => Graph.sssp(weighted.withColumn("w", lit(0L)), "src", "dst", "w", seeds, "id")),
+      "bpeTrain" -> (() => graft.operators.Pipeline.bpeTrain(docs, "text", merges = 3)))
+    for ((op, run) <- runs) {
+      val (labels, after) = roundLabels(run())
+      val label = s"graft\\.$op round=\\d+".r
+      assert(labels.nonEmpty, s"$op started no job")
+      assert(labels.forall(label.matches), s"$op jobs: ${labels.distinct.mkString(", ")}")
+      assert(after == "caller", s"$op left the job description at $after")
+    }
+  }
+
+  test("no iterative operator leaves a cached relation behind, on return or on a throw") {
+    def leaves(what: String)(f: => Any): Unit = {
+      spark.catalog.clearCache()
+      f
+      assert(spark.sharedState.cacheManager.isEmpty, s"$what left a cached relation")
+    }
+    // repartitioned so every guard fires at run time, inside a round,
+    // not while the optimizer folds a local relation
+    val edges = bidirect(Seq((1L, 2L), (2L, 3L), (3L, 4L))).repartition(2)
+    val zeroW = edges.withColumn("w", lit(0L)).repartition(2)
+    val seeds = Seq(1L).toDF("id").repartition(2)
+    val noSeeds = Seq.empty[Long].toDF("id").repartition(2)
+    val path = (0L until 12L).map(i => (i, i + 1)).toDF("src", "dst").repartition(2)
+    leaves("sssp with a zero weight") {
+      val e = intercept[Exception](Graph.sssp(zeroW, "src", "dst", "w", seeds, "id"))
+      assert(e.getMessage.contains("positive integer"))
+    }
+    leaves("personalizedPagerank with no seeds") {
+      val e = intercept[Exception](
+        Graph.personalizedPagerank(edges, "src", "dst", noSeeds, "id", iters = 2))
+      assert(e.getMessage.contains("seed set is empty"))
+    }
+    leaves("weighted pagerank with a zero weight") {
+      val e = intercept[Exception](Graph.pagerank(zeroW, "src", "dst", 2, weightCol = Some("w")))
+      assert(e.getMessage.contains("weight out of range"))
+    }
+    leaves("connectedComponents out of rounds") {
+      intercept[IllegalStateException](Graph.connectedComponents(path, "src", "dst", maxRounds = 2))
+    }
+    leaves("bfs out of rounds") {
+      intercept[IllegalStateException](Graph.bfs(path, "src", "dst", seeds, "id", maxRounds = 2))
+    }
+    leaves("labelPropagation") { Graph.labelPropagation(edges, "src", "dst", iters = 2) }
   }
 }

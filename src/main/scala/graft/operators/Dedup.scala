@@ -747,50 +747,48 @@ object Dedup {
     val edges = pairs.select(col("id_l").as("src"), col("id_r").as("dst"))
       .union(pairs.select(col("id_r").as("src"), col("id_l").as("dst")))
       .distinct().cache()
-    // hybrid: the pair set is orders of magnitude smaller than the
-    // corpus (it is ~the true-dup count); below the threshold a
-    // driver-side union-find beats log-rounds of shuffle joins. Above
-    // it, fall through to distributed min-label propagation.
-    val nEdges = edges.count()
-    if (nEdges / 2 <= driverThreshold) {
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
+    // released on every exit: neither path's result reads it
+    try {
+      // hybrid: the pair set is orders of magnitude smaller than the
+      // corpus (it is ~the true-dup count); below the threshold a
+      // driver-side union-find beats log-rounds of shuffle joins. Above
+      // it, fall through to distributed min-label propagation.
+      if (edges.count() / 2 <= driverThreshold) {
+        val spark = pairs.sparkSession
+        import spark.implicits._
+        val parent = scala.collection.mutable.Map.empty[Long, Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+          var c = x
+          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+          r
+        }
+        val allIds = scala.collection.mutable.Set.empty[Long]
+        // collect from the cached edges relation (one direction) so the
+        // upstream pair pipeline is not re-executed
+        edges.filter(col("src") < col("dst"))
+          .select(col("src").cast("long"), col("dst").cast("long")).collect().foreach { row =>
+          allIds += row.getLong(0) += row.getLong(1)
+          val (a, b) = (find(row.getLong(0)), find(row.getLong(1)))
+          if (a != b) { val (lo, hi) = if (a < b) (a, b) else (b, a); parent(hi) = lo }
+        }
+        allIds.toSeq.sorted.map(id => (id, find(id))).toDF("id", "canonical_id")
+      } else {
+        // distributed path: one min-label-propagation implementation
+        // lives in Graph.connectedComponents (sealed result, caches
+        // dropped); the symmetric cached edge relation feeds it directly
+        try Graph.connectedComponents(edges, "src", "dst", maxIterations)
+          .select(col("node").as("id"), col("component").as("canonical_id"))
+        catch {
+          case e: IllegalStateException =>
+            throw new IllegalStateException(
+              s"canonicalize did not converge in $maxIterations rounds — a duplicate " +
+                s"chain longer than $maxIterations hops exists; raise maxIterations " +
+                "(propagation is one hop per round)", e)
+        }
       }
-      val allIds = scala.collection.mutable.Set.empty[Long]
-      // collect from the cached edges relation (one direction) so the
-      // upstream pair pipeline is not re-executed
-      edges.filter(col("src") < col("dst"))
-        .select(col("src").cast("long"), col("dst").cast("long")).collect().foreach { row =>
-        allIds += row.getLong(0) += row.getLong(1)
-        val (a, b) = (find(row.getLong(0)), find(row.getLong(1)))
-        if (a != b) { val (lo, hi) = if (a < b) (a, b) else (b, a); parent(hi) = lo }
-      }
-      val out = allIds.toSeq.sorted.map(id => (id, find(id)))
-      edges.unpersist()
-      return out.toDF("id", "canonical_id")
-    }
-    // distributed path: one min-label-propagation implementation lives
-    // in Graph.connectedComponents (sealed result, caches dropped);
-    // the symmetric cached edge relation feeds it directly
-    val cc =
-      try Graph.connectedComponents(edges, "src", "dst", maxIterations)
-      catch {
-        case e: IllegalStateException =>
-          edges.unpersist()
-          throw new IllegalStateException(
-            s"canonicalize did not converge in $maxIterations rounds — a duplicate " +
-              s"chain longer than $maxIterations hops exists; raise maxIterations " +
-              "(propagation is one hop per round)", e)
-      }
-    edges.unpersist()
-    cc.select(col("node").as("id"), col("component").as("canonical_id"))
+    } finally edges.unpersist()
   }
 
   /** End-to-end dedup decision: every doc id with the canonical id of

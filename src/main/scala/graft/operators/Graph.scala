@@ -31,10 +31,10 @@ object Graph {
   val TotalUnits: Long = 1L << 40
 
   /** The round loop of graft's iterative operators. The per-round
-    * barrier (join + agg + checkpoint + probe) is their cost driver
-    * and the round COUNT is data-dependent (eccentricity / peeling
-    * depth), so each round's jobs carry `<label> round=<n>`. Relations
-    * taken through [[cache]] are the loop invariants; [[Rounds.apply]]
+    * barrier (join + agg + checkpoint) is their cost driver and the
+    * round COUNT is data-dependent (eccentricity / peeling depth), so
+    * each round's jobs carry `<label> round=<n>`. Relations taken
+    * through [[cache]] are the loop invariants; [[Rounds.apply]]
     * unpersists them when the operator exits. */
   private[operators] final class Rounds private (sc: SparkContext, label: String) {
     private val invariants = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -57,9 +57,47 @@ object Graph {
 
     /** Exactly `rounds` rounds. */
     def repeat(rounds: Int)(round: Int => Unit): Unit = loop(rounds) { n => round(n); false }
+
+    /** Runs `round` from `init` to its fixed point. `init` and every
+      * next state are sealed by an eager localCheckpoint (a round reads
+      * its previous state twice, so the seal is its lineage cut), whose
+      * own job reports the row count and `max(__changed)`: a round may
+      * mark the rows it changed with that boolean column, dropped above
+      * the observation. A round that changed no row and kept the row
+      * count converged; `maxRounds` rounds without one throw
+      * IllegalStateException(exhausted). */
+    def converge(maxRounds: Int, exhausted: => String)(init: DataFrame)
+                (round: DataFrame => DataFrame): DataFrame = {
+      var (state, rows, _) = seal(init)
+      val converged = loop(maxRounds) { _ =>
+        val (next, n, changed) = seal(round(state))
+        val settled = !changed && n == rows
+        state = next; rows = n
+        settled
+      }
+      if (!converged) throw new IllegalStateException(exhausted)
+      state
+    }
+
+    /** `df` checkpointed, with its row count and whether any row is
+      * marked [[Rounds.Changed]]. */
+    private def seal(df: DataFrame): (DataFrame, Long, Boolean) = {
+      val flag = if (df.columns.contains(Rounds.Changed)) col(Rounds.Changed) else lit(false)
+      // atop the seal's plan the observation runs in its job's result
+      // stage, whose accumulator updates Spark applies once per
+      // partition: a retried task cannot count twice. The metrics are read
+      // from the seal's own execution, with no listener round trip.
+      val top = df.observe("graft_round", count(lit(1)), max(flag)).drop(Rounds.Changed)
+      val out = top.localCheckpoint()
+      val m = top.queryExecution.observedMetrics("graft_round")
+      (out, m.getLong(0), !m.isNullAt(1) && m.getBoolean(1))
+    }
   }
 
   private[operators] object Rounds {
+    /** The column a [[Rounds.converge]] round marks its changed rows with. */
+    val Changed = "__changed"
+
     /** Runs `body` with its jobs labelled `<label> round=0` until its
       * first round; restores the caller's job description and releases
       * the invariants on every exit. */
@@ -263,10 +301,10 @@ object Graph {
     * Algorithm: synchronous min-label propagation — each round every
     * node adopts the minimum label among itself and its neighbors, so
     * a component's min id floods outward one hop per round and the
-    * round count is O(max component diameter), NOT O(nodes). Rounds
-    * are driven by a convergence check (an any-label-changed count),
-    * and the operator THROWS rather than return split components if
-    * `maxRounds` is hit.
+    * round count is O(max component diameter), NOT O(nodes). The
+    * rounds run to a fixed point through [[Rounds.converge]] (a round's
+    * seal reports whether any label changed), and the operator THROWS
+    * rather than return split components if `maxRounds` is hit.
     *
     * Scale shape per round: one edges⋈labels equi-join on the cached
     * pre-partitioned edge layout (the same
@@ -274,13 +312,12 @@ object Graph {
     * + one partial-agg'd min groupBy; labels are one (long, long) row
     * per node. Each round's labels are sealed with an EAGER
     * localCheckpoint, not cache(): the round references the previous
-    * labels three times (neighbor-min, rebuild, convergence probe), so
-    * a cache would stop recompute but the LOGICAL plan would still
-    * triple per round — 3^k tree nodes by round k, and analysis/plan
-    * stringification hangs long before compute does (caught by this
-    * operator's 12-round path-graph spec). The checkpoint makes every
-    * round plan against a leaf; the convergence probe rides the same
-    * barrier. Shuffles carry ids only.
+    * labels twice (neighbor-min, rebuild), so a cache would stop
+    * recompute but the LOGICAL plan would still double per round —
+    * 2^k tree nodes by round k, and analysis/plan stringification
+    * hangs long before compute does (caught by this operator's
+    * 12-round path-graph spec). The checkpoint makes every round plan
+    * against a leaf. Shuffles carry ids only.
     *
     * Output: (node, component). */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
@@ -294,34 +331,19 @@ object Graph {
         .distinct()
         .repartition(col("__dst")))
       // seed: min(self, direct neighbors) — one round of flooding for free
-      var labels = sym.groupBy(col("__src").as("node"))
+      val seed = sym.groupBy(col("__src").as("node"))
         .agg(least(min(col("__dst")), first(col("__src"))).as("component"))
-        .localCheckpoint()
-      val converged = r.loop(maxRounds) { _ =>
+      r.converge(maxRounds,
+        s"connectedComponents did not converge in $maxRounds rounds — a component " +
+          s"with diameter > $maxRounds exists; raise maxRounds (propagation is one " +
+          "hop per round)")(seed) { labels =>
         val neighborMin = sym.join(labels, col("__dst") === col("node"))
-          .groupBy(col("__src").as("node"))
+          .groupBy(col("__src").as("__nn"))
           .agg(min(col("component")).as("__nmin"))
-        // eager checkpoint = the round's materialization barrier AND
-        // lineage cut (see scaladoc); old checkpoint blocks are released
-        // by the context cleaner once `labels` is rebound
-        val updated = labels
-          .join(neighborMin.withColumnRenamed("node", "__nn"),
-            col("node") === col("__nn"), "left_outer")
-          .select(col("node"),
-            least(col("component"), coalesce(col("__nmin"), col("component"))).as("component"))
-          .localCheckpoint()
-        val changed = updated
-          .join(labels.withColumnRenamed("component", "__old"), "node")
-          .filter(col("component") =!= col("__old")).limit(1).count()
-        labels = updated
-        changed == 0L
+        val c = least(col("component"), coalesce(col("__nmin"), col("component")))
+        labels.join(neighborMin, col("node") === col("__nn"), "left_outer")
+          .select(col("node"), c.as("component"), (c =!= col("component")).as(Rounds.Changed))
       }
-      if (!converged)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxRounds rounds — a component " +
-            s"with diameter > $maxRounds exists; raise maxRounds (propagation is one " +
-            "hop per round)")
-      labels
     }
   }
 
@@ -366,10 +388,11 @@ object Graph {
     * pre-partitioned edge layout + one partial-agg'd min groupBy; the
     * dist relation is one (long, long) row per REACHED node (grows
     * monotonically to the reachable set, never the full graph).
-    * Rounds are sealed by an eager localCheckpoint — the round
-    * references the previous dist three times (propagate, merge,
-    * probe), so a cache would leave the logical plan tripling per
-    * round (the connectedComponents 3^k lesson). Shuffles carry
+    * Rounds run to a fixed point through [[Rounds.converge]], sealed
+    * by an eager localCheckpoint — the round references the previous
+    * dist twice (propagate, merge), so a cache would leave the logical
+    * plan doubling per round (the connectedComponents 2^k lesson); the
+    * seal reports whether a node entered or improved. Shuffles carry
     * (id, dist) longs. Weights are guarded per-row (w ≥ 1, codegen'd
     * raise_error — a zero/negative weight would loop or corrupt the
     * fixed point silently).
@@ -401,10 +424,8 @@ object Graph {
         .filter(col("__src") =!= col("__dst"))
         .groupBy(col("__src"), col("__dst")).agg(min(col("__w")).as("__w"))
         .repartition(col("__src")))
-      var dist = seeds.select(col(seedCol).as("node")).distinct()
-        .withColumn("dist", lit(0L))
-        .localCheckpoint()
-      val converged = r.loop(maxRounds) { _ =>
+      val seed = seeds.select(col(seedCol).as("node")).distinct().withColumn("dist", lit(0L))
+      r.converge(maxRounds, exhausted)(seed) { dist =>
         val prop = e.join(dist, col("__src") === col("node"))
           .select(col("__dst"), (col("dist") + col("__w")).as("__cand"))
           .filter(col("__cand") <= maxCost)
@@ -412,21 +433,11 @@ object Graph {
           .agg(min(col("__cand")).as("__nd"))
         // full outer merge: newly-reached nodes enter, known nodes keep
         // min(old, propagated); seeds stay at 0 by the min
-        val updated = dist
-          .join(prop, col("node") === col("__nn"), "full_outer")
-          .select(coalesce(col("node"), col("__nn")).as("node"),
-            least(coalesce(col("dist"), col("__nd")),
-              coalesce(col("__nd"), col("dist"))).as("dist"))
-          .localCheckpoint()
-        val changed = updated
-          .join(dist.withColumnRenamed("dist", "__old"), Seq("node"), "left_outer")
-          .filter(col("__old").isNull || col("dist") =!= col("__old"))
-          .limit(1).count()
-        dist = updated
-        changed == 0L
+        val d = least(coalesce(col("dist"), col("__nd")), coalesce(col("__nd"), col("dist")))
+        dist.join(prop, col("node") === col("__nn"), "full_outer")
+          .select(coalesce(col("node"), col("__nn")).as("node"), d.as("dist"),
+            (col("dist").isNull || d =!= col("dist")).as(Rounds.Changed))
       }
-      if (!converged) throw new IllegalStateException(exhausted)
-      dist
     }
   }
 
@@ -440,33 +451,31 @@ object Graph {
     *
     * Input may contain duplicates / self-loops / both directions —
     * normalized away first. Output: one row (n_triangles). */
-  def triangleCount(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val und = edges
-      .select(least(col(aCol), col(bCol)).as("a"), greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    val deg = und.select(col("a").as("n")).union(und.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-    val o = und
-      .join(deg.select(col("n").as("a"), col("d").as("da")), "a")
-      .join(deg.select(col("n").as("b"), col("d").as("db")), "b")
-      .select(
-        when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-          col("a")).otherwise(col("b")).as("src"),
-        when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-          col("b")).otherwise(col("a")).as("dst"))
-      .cache()
-    // the result is one row — materialize it eagerly (cheap) so the
-    // orientation cache can be dropped before returning instead of
-    // living for the rest of the session
-    val res = o.as("e1")
-      .join(o.as("e2"), col("e1.dst") === col("e2.src"))
-      .join(o.as("e3"),
-        col("e3.src") === col("e1.src") && col("e3.dst") === col("e2.dst"), "left_semi")
-      .agg(count(lit(1)).as("n_triangles"))
-      .localCheckpoint()
-    o.unpersist()
-    res
-  }
+  def triangleCount(edges: DataFrame, aCol: String, bCol: String): DataFrame =
+    Rounds(edges, "graft.graph triangles") { r =>
+      val und = edges
+        .select(least(col(aCol), col(bCol)).as("a"), greatest(col(aCol), col(bCol)).as("b"))
+        .filter(col("a") =!= col("b")).distinct()
+      val deg = und.select(col("a").as("n")).union(und.select(col("b").as("n")))
+        .groupBy("n").agg(count(lit(1)).as("d"))
+      val o = r.cache(und
+        .join(deg.select(col("n").as("a"), col("d").as("da")), "a")
+        .join(deg.select(col("n").as("b"), col("d").as("db")), "b")
+        .select(
+          when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
+            col("a")).otherwise(col("b")).as("src"),
+          when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
+            col("b")).otherwise(col("a")).as("dst")))
+      // the result is one row — materialize it eagerly (cheap) so the
+      // orientation cache can be dropped before returning instead of
+      // living for the rest of the session
+      o.as("e1")
+        .join(o.as("e2"), col("e1.dst") === col("e2.src"))
+        .join(o.as("e3"),
+          col("e3.src") === col("e1.src") && col("e3.dst") === col("e2.dst"), "left_semi")
+        .agg(count(lit(1)).as("n_triangles"))
+        .localCheckpoint()
+    }
 
   /** k-core extraction by synchronous peeling: repeatedly delete every
     * node with (undirected) degree &lt; k until the survivor set is
@@ -484,39 +493,30 @@ object Graph {
     * edge relation only ever SHRINKS. Rounds are sealed by eager
     * localCheckpoints (the concomp plan-growth lesson). Round count =
     * peeling depth; sparse tendrils peel in round 1, so depth is
-    * small on real graphs — still, convergence is probed and the
-    * operator THROWS on round exhaustion rather than return a
-    * superset of the core. */
+    * small on real graphs — still, the rounds run through
+    * [[Rounds.converge]] (an edge seal that kept its row count is the
+    * fixed point) and the operator THROWS on round exhaustion rather
+    * than return a superset of the core. */
   def kcore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
             maxRounds: Int = 8): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(maxRounds >= 1, "maxRounds must be >= 1")
     Rounds(edges, "graft.graph kcore") { r =>
-      var e = edges
+      val e0 = edges
         .select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
         .filter(col("__src") =!= col("__dst"))
         .distinct()
         .repartition(col("__src"))
-        .localCheckpoint()
-      var eCount = e.count()
-      val converged = r.loop(maxRounds) { _ =>
+      r.converge(maxRounds,
+        s"kcore did not converge in $maxRounds rounds — peeling is still removing " +
+          "nodes; raise maxRounds")(e0) { e =>
         val alive = e.groupBy(col("__src")).agg(count(lit(1)).as("__deg"))
           .filter(col("__deg") >= k)
           .select(col("__src").as("__a"))
           .localCheckpoint()
-        e = e
-          .join(alive, col("__src") === col("__a"), "left_semi")
+        e.join(alive, col("__src") === col("__a"), "left_semi")
           .join(alive.withColumnRenamed("__a", "__b"), col("__dst") === col("__b"), "left_semi")
-          .localCheckpoint()
-        val before = eCount
-        eCount = e.count()
-        eCount == before
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"kcore did not converge in $maxRounds rounds — peeling is still removing " +
-            "nodes; raise maxRounds")
-      e.groupBy(col("__src").as("node")).agg(count(lit(1)).as("core_degree"))
+      }.groupBy(col("__src").as("node")).agg(count(lit(1)).as("core_degree"))
     }
   }
 }

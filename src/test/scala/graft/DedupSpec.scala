@@ -181,6 +181,29 @@ class DedupSpec extends SparkSpec {
     assert(dist == canon)
   }
 
+  test("canonicalize releases its edge cache when it throws, on either path") {
+    def leaves(what: String)(f: => Any): Unit = {
+      spark.catalog.clearCache()
+      f
+      assert(spark.sharedState.cacheManager.isEmpty, s"$what left a cached relation")
+    }
+    // repartitioned so the raise fires at run time, not while the
+    // optimizer folds a local relation
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("a", "id_r").repartition(2)
+    val boom = pairs.withColumn("id_l",
+      when(col("a") > 2L, raise_error(lit("pair boom"))).otherwise(col("a")).cast("long"))
+    for (threshold <- Seq(1000000L, 0L)) leaves(s"raising pairs at driverThreshold $threshold") {
+      val e = intercept[Exception](Dedup.canonicalize(boom, driverThreshold = threshold))
+      assert(e.getMessage.contains("pair boom"))
+    }
+    leaves("a chain longer than maxIterations") {
+      val e = intercept[IllegalStateException](
+        Dedup.canonicalize(pairs.withColumnRenamed("a", "id_l"), maxIterations = 1,
+          driverThreshold = 0L))
+      assert(e.getMessage.contains("canonicalize did not converge in 1 rounds"))
+    }
+  }
+
   test("incremental exact: duplicates of stored hashes flagged, novel hashes enter the store") {
     val statePath = java.nio.file.Files.createTempDirectory("graft_incx").toString + "/hashes"
     Dedup.writeExactState(corpus, "id", "text", statePath)

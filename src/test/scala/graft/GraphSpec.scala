@@ -294,6 +294,7 @@ class GraphSpec extends SparkSpec {
       "graph bfs" -> (() => Graph.bfs(edges, "src", "dst", seeds, "id")),
       "graph sssp" -> (() => Graph.sssp(weighted, "src", "dst", "w", seeds, "id")),
       "graph kcore" -> (() => Graph.kcore(edges, "src", "dst", k = 2)),
+      "graph triangles" -> (() => Graph.triangleCount(edges, "src", "dst")),
       // throws: round exhaustion, and a guard raised inside a round
       "graph concomp" -> (() => Graph.connectedComponents(path, "src", "dst", maxRounds = 2)),
       "graph sssp" -> (() => Graph.sssp(weighted.withColumn("w", lit(0L)), "src", "dst", "w", seeds, "id")),
@@ -340,5 +341,41 @@ class GraphSpec extends SparkSpec {
       intercept[IllegalStateException](Graph.bfs(path, "src", "dst", seeds, "id", maxRounds = 2))
     }
     leaves("labelPropagation") { Graph.labelPropagation(edges, "src", "dst", iters = 2) }
+    leaves("triangleCount over an edge column that raises") {
+      // over a range, not a local relation: the optimizer would push the
+      // operator's filter into a local relation and raise while planning
+      val boom = spark.range(1, 4).select(
+        when(col("id") > 1L, raise_error(lit("edge boom"))).otherwise(col("id")).cast("long").as("a"),
+        (col("id") + 1L).as("b"))
+      val e = intercept[Exception](Graph.triangleCount(boom, "a", "b"))
+      assert(e.getMessage.contains("edge boom"))
+    }
+  }
+
+  test("a round of connectedComponents, bfs, sssp and kcore stays within its job budget") {
+    // fixed fixture: a 7-node path (6 flooding rounds from one end) and
+    // a K4 with a 3-edge tail (3 peeling rounds for k = 3)
+    val path = bidirect((0L until 6L).map(i => (i, i + 1))).repartition(2)
+    val weighted = path.withColumn("w", lit(2L))
+    val clique = for (a <- 1L to 4L; b <- 1L to 4L if a < b) yield (a, b)
+    val tailed = bidirect(clique ++ Seq((4L, 5L), (5L, 6L), (6L, 7L))).repartition(2)
+    val seeds = Seq(0L).toDF("id").repartition(2)
+    // jobs budget of the set-up (round=0), of round 1 (which also fills
+    // the edge cache of bfs/sssp) and of every later round
+    val budgets: Seq[(String, () => Any, Seq[Int])] = Seq(
+      ("concomp", () => Graph.connectedComponents(path, "src", "dst"), Seq(6, 4, 5)),
+      ("bfs", () => Graph.bfs(path, "src", "dst", seeds, "id"), Seq(2, 8, 4)),
+      ("sssp", () => Graph.sssp(weighted, "src", "dst", "w", seeds, "id"), Seq(2, 8, 4)),
+      ("kcore", () => Graph.kcore(tailed, "src", "dst", k = 3), Seq(4, 5, 5)))
+    for ((op, run, budget) <- budgets) {
+      val (labels, _) = roundLabels(run())
+      val jobs = labels.groupMapReduce(l => "round=(\\d+)".r.findFirstMatchIn(l).get.group(1).toInt)(_ => 1)(_ + _)
+      info(s"$op jobs by round: ${jobs.toSeq.sorted.map { case (n, c) => s"$n:$c" }.mkString(" ")}")
+      assert(jobs.size > 2, s"$op ran ${jobs.size - 1} rounds")
+      for ((n, c) <- jobs) {
+        val b = budget(n min 2)
+        assert(c <= b, s"$op round $n ran $c jobs, budget $b")
+      }
+    }
   }
 }

@@ -178,11 +178,23 @@ object Dedup {
     * pairs; a degenerate all-identical-spam bucket is dropped rather
     * than allowed to explode an executor).
     *
+    * `carry` columns ride through the buckets with their id: the
+    * output is (id_l, id_r) plus `<c>_l`, `<c>_r` per carried column,
+    * so a verify that needs only a fixed-width per-id value (a SimHash
+    * signature, a new-side flag) reads it off the pair instead of
+    * joining it back — one fewer shuffle. A carried column must be a
+    * function of the id (same doc ⇒ same value); with a carry, ids are
+    * collected as `struct(id +: carry)` and sorted id-major, so the
+    * pair set and the cap are the id-only ones (spec-pinned). Never
+    * carry KB-sized arrays (shingle sets, embeddings): every band would
+    * ship them.
+    *
     * The result carries its own planner size bound: a [[FanoutBound]]
     * of `maxBucketSize` over the Generate-built pairs, so no join over
     * them can statically broadcast a pair explosion that Catalyst's
     * Generate estimate sizes at scan size (the sf10 8 GiB broadcast
-    * crash). The relation stays lazy — no cache, no eager job — and a
+    * crash). The bound sits beneath the distinct, so a caller's filter
+    * on the pairs is still pushed below the pair exchange. The relation stays lazy — no cache, no eager job — and a
     * consumer that reads it twice shares one bucket pipeline through
     * exchange reuse.
     *
@@ -200,8 +212,8 @@ object Dedup {
     * (minhash/ngram's shingle-set jaccard) keep the pre-verify dedup —
     * there each duplicate costs a full join row, not 64 multiplies. */
   def pairsFromBuckets(bucketed: DataFrame, idCol: String,
-                                          bucketCols: Seq[String], maxBucketSize: Int,
-                                          dedup: Boolean = true): DataFrame = {
+                       bucketCols: Seq[String], maxBucketSize: Int,
+                       dedup: Boolean = true, carry: Seq[String] = Nil): DataFrame = {
     // Pre-truncate each bucket to cap+1 rows BEFORE collecting: the
     // row_number window is sort-based (spills gracefully), so a
     // degenerate 10M-doc bucket never materializes as one in-memory
@@ -213,8 +225,17 @@ object Dedup {
     val truncated = bucketed
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= maxBucketSize + 1)
+    // A bucket collects bare ids, or (id, carry...) structs sorted
+    // id-major. Bare ids are cheaper to collect, sort and explode (sf1
+    // ladder, 4 cores: dedup_minhash 4.0-4.2 s, 5.1 s as single-field
+    // structs), and they type the pair ids non-null: a join over the
+    // pairs infers no null filter to push through the distinct, so both
+    // of pairSets' reads of the pairs plan alike and share one bucket
+    // pipeline.
+    def field(side: String, f: String) = if (carry.isEmpty) col(side) else col(side).getField(f)
+    val elem = if (carry.isEmpty) col(idCol) else struct((idCol +: carry).map(col): _*)
     val ids = truncated.groupBy(bucketCols.map(col): _*)
-      .agg(collect_set(col(idCol)).as("__ids"))
+      .agg(collect_set(elem).as("__ids"))
       .filter(size(col("__ids")).between(2, maxBucketSize))
       .select(array_sort(col("__ids")).as("__ids"))
     // without dedup's exchange, nothing after the explosion is
@@ -226,51 +247,16 @@ object Dedup {
     val spread =
       if (dedup) ids
       else ids.repartition(bucketed.sparkSession.sessionState.conf.numShufflePartitions, col("__ids"))
+    def sides(f: String, name: String) = Seq("l", "r").map(s => field(s"__$s", f).as(s"${name}_$s"))
     val pairs = spread
-      .select(posexplode(col("__ids")).as(Seq("__i", "id_l")), col("__ids"))
-      .select(col("id_l"),
-        explode(slice(col("__ids"), col("__i") + 2, size(col("__ids")))).as("id_r"))
-    FanoutBound.bound(if (dedup) pairs.distinct() else pairs, maxBucketSize)
-  }
-
-  /** [[pairsFromBuckets]] with a per-id payload column carried through
-    * the bucket pipeline: emits (id_l, payload_l, id_r, payload_r).
-    *
-    * Exists for PLAN SAFETY, not convenience. A pair relation is built
-    * by Generate (explode) nodes, and Generate does not inflate
-    * Catalyst's static size estimate — a pair explosion rooted at a
-    * small store scan is estimated at scan size, so a downstream
-    * "pairs ⋈ signatures" join can statically BROADCAST the pair side:
-    * on the sf10 ladder's dense-vocab corpus the candidate relation
-    * reached the hard 8 GiB broadcast cap and killed the job. Carrying
-    * the (fixed-width) payload through the buckets removes that join
-    * entirely — same pair set, same cap semantics, one fewer shuffle.
-    * Payload must be a function of the id (same doc ⇒ same payload),
-    * which every signature column satisfies; the struct sort is
-    * id-major, so pair enumeration order and the bucket-size cap are
-    * bit-identical to [[pairsFromBuckets]] (spec-pinned). Use for
-    * 8-16 byte signatures; for array payloads (minhash shingle sets,
-    * embeddings) keep the id-only variant — carrying KB-sized arrays
-    * 16-bands-wide would multiply shuffle volume ~100×; its
-    * [[FanoutBound]] keeps the verify join from broadcasting the pair
-    * side. */
-  def pairsFromBucketsCarrying(bucketed: DataFrame, idCol: String, payloadCol: String,
-                               bucketCols: Seq[String], maxBucketSize: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(bucketCols.map(col): _*).orderBy(col(idCol))
-    val truncated = bucketed
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= maxBucketSize + 1)
-    val ids = truncated.groupBy(bucketCols.map(col): _*)
-      .agg(collect_set(struct(col(idCol), col(payloadCol))).as("__ids"))
-      .filter(size(col("__ids")).between(2, maxBucketSize))
-      .select(array_sort(col("__ids")).as("__ids"))
-    ids
       .select(posexplode(col("__ids")).as(Seq("__i", "__l")), col("__ids"))
       .select(col("__l"), explode(slice(col("__ids"), col("__i") + 2, size(col("__ids")))).as("__r"))
-      .select(col(s"__l.$idCol").as("id_l"), col(s"__l.$payloadCol").as("payload_l"),
-        col(s"__r.$idCol").as("id_r"), col(s"__r.$payloadCol").as("payload_r"))
-      .distinct()
+      .select(sides(idCol, "id") ++ carry.flatMap(c => sides(c, c)): _*)
+    // no rule pushes a filter through the bound: beneath the distinct,
+    // a caller's filter (the hamming verify, the new-side flag) still
+    // prunes before the pair exchange
+    val bounded = FanoutBound.bound(pairs, maxBucketSize)
+    if (dedup) bounded.distinct() else bounded
   }
 
   /** MinHash+LSH near-duplicate pairs, exact-verified with n-gram
@@ -487,6 +473,27 @@ object Dedup {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
   }
 
+  /** The flag column [[newSide]] adds, and the pair filter on its
+    * carried sides. */
+  private val NewSide = "__new"
+  private val hasNewSide = col(s"${NewSide}_l") || col(s"${NewSide}_r")
+
+  /** The stored and new per-id state of an incremental operator merged
+    * by id, with a [[NewSide]] flag: a stored id keeps its STORED row
+    * (min_by on the flag: false = stored wins, deterministic) and is
+    * not new, so re-submitted documents never count as a new side.
+    * Carried through the buckets, the flag selects the pairs with a
+    * new side — no new-id relation, no semi-join. */
+  private def newSide(stored: DataFrame, fresh: DataFrame, idCol: String,
+                      cols: Seq[String]): DataFrame = {
+    def flagged(df: DataFrame, isNew: Boolean) =
+      df.select(col(idCol), struct(cols.map(col): _*).as("__s"), lit(isNew).as(NewSide))
+    flagged(stored, isNew = false).union(flagged(fresh, isNew = true))
+      .groupBy(col(idCol))
+      .agg(min_by(col("__s"), col(NewSide)).as("__s"), min(col(NewSide)).as(NewSide))
+      .select(col(idCol) +: cols.map(c => col("__s").getField(c).as(c)) :+ col(NewSide): _*)
+  }
+
   /** Incremental MinHash dedup: near-dup pairs of a NEW batch against
     * itself and the persisted band+shingle store — the third member of
     * the incremental trio ([[incrementalExact]], [[incrementalSimhashPairs]]).
@@ -499,8 +506,9 @@ object Dedup {
     * defaults — pass the same values used at [[writeMinhashState]]).
     * Re-submitting an already-stored id is a no-op by policy: the
     * stored signature wins, changed text is NOT re-signed (delete the
-    * store row first to re-ingest), and the id does not count as a
-    * "new side" — so its previously-reported pairs never re-emit.
+    * store row first to re-ingest), and a stored id is never a new
+    * side (see [[newSide]]) — so its previously-reported pairs never
+    * re-emit.
     * Returns (id_l, id_r, jaccard) like [[minhashPairs]]. */
   def incrementalMinhashPairs(newDocs: DataFrame, idCol: String, textCol: String,
                               statePath: String,
@@ -510,26 +518,13 @@ object Dedup {
     val spark = newDocs.sparkSession
     val newState = minhashState(newDocs, idCol, textCol, shingleK, numHashes, bands).cache()
     val oldState = spark.read.parquet(statePath).select(col(idCol), col("bands"), col("sh"))
-    // ids genuinely absent from the store — derived POST-merge, not
-    // from the raw batch: a re-submitted id keeps its stored state, so
-    // counting it as "new" would re-emit its old pairs every batch
-    val newIds = newState.select(col(idCol))
-      .join(oldState.select(col(idCol)), Seq(idCol), "left_anti")
-    // a re-submitted id keeps its STORED row (min_by on the boolean:
-    // false = old wins — deterministic)
-    val all = oldState.select(col(idCol), col("bands"), col("sh"), lit(false).as("__new"))
-      .union(newState.select(col(idCol), col("bands"), col("sh"), lit(true).as("__new")))
-      .groupBy(col(idCol)).agg(min_by(struct(col("bands"), col("sh")), col("__new")).as("__s"))
-      .select(col(idCol), col("__s.bands").as("bands"), col("__s.sh").as("sh"))
-    val bucketed = all.select(col(idCol),
+    val all = newSide(oldState, newState, idCol, Seq("bands", "sh"))
+    val bucketed = all.select(col(idCol), col(NewSide),
       posexplode(col("bands")).as(Seq("band", "bucket")))
-    // pairs with a new side: one read of the candidates, each pair
-    // meeting the new ids once per side
-    val withNew = pairsFromBuckets(bucketed, idCol, Seq("band", "bucket"), maxBucketSize)
-      .select(col("id_l"), col("id_r"), explode(array(col("id_l"), col("id_r"))).as("__id"))
-      .join(newIds.select(col(idCol).as("__id")), Seq("__id"), "left_semi")
-      .select(col("id_l"), col("id_r"))
-      .distinct()
+    val withNew = pairsFromBuckets(bucketed, idCol, Seq("band", "bucket"), maxBucketSize,
+        carry = Seq(NewSide))
+      .filter(hasNewSide)
+      .select("id_l", "id_r")
     val sets = all.select(col(idCol), col("sh"))
     val pairs = jaccard(withNew
       .join(sets.select(col(idCol).as("id_l"), col("sh").as("set_l")), "id_l")
@@ -610,27 +605,30 @@ object Dedup {
       .select(col(idCol),
         X.simhashSignature(T.normText(col(textCol)), tokenHash.useMd5).as("sig"))
 
-  /** SimHash near-dup pairs: band the 64 bits into 4×16-bit chunks
+  /** SimHash LSH banding: the 64 signature bits as 4×16-bit chunks
     * (any shared chunk → candidate; catches hamming distance <= 3 by
-    * pigeonhole, i.e. candidate generation is EXACT for the default
-    * maxHamming=3 as long as no bucket exceeds `maxBucketSize`),
-    * verify with exact hamming via bit_count(xor). */
+    * pigeonhole). An array of 4 bucket longs, posexploded into
+    * (band, bucket) by every SimHash candidate path. */
+  def simhashBands(sig: Column): Column =
+    array((0 until 4).map(b => shiftright(sig, b * 16).bitwiseAND(lit(0xFFFFL))): _*)
+
+  /** SimHash near-dup pairs: [[simhashBands]] buckets (candidate
+    * generation is EXACT for the default maxHamming=3 as long as no
+    * bucket exceeds `maxBucketSize`), verified with exact hamming via
+    * bit_count(xor) on the signatures carried through the buckets. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3, maxBucketSize: Int = 1000,
-                   tokenHash: TokenHash = xxTokenHash): DataFrame = {
-    // sig is CARRIED through the bucket pipeline (8 bytes per banded
-    // row) instead of joined back per candidate: the join-back shape
-    // let the static planner broadcast the pair side (see
-    // pairsFromBucketsCarrying — the 8 GiB sf10 crash), and the carry
-    // is one fewer shuffle besides (r1-r14 cached (id, sig) and
-    // joined it twice; the carry subsumes both the cache and the join).
-    val sigs = simhashSignatures(df, idCol, textCol, tokenHash)
-    val banded = sigs.select(col(idCol), col("sig"),
-      posexplode(array((0 until 4).map(b =>
-        shiftright(col("sig"), b * 16).bitwiseAND(lit(0xFFFFL))): _*)).as(Seq("band", "bucket")))
-    pairsFromBucketsCarrying(banded, idCol, "sig", Seq("band", "bucket"), maxBucketSize)
-      .select(col("id_l"), col("id_r"),
-        bit_count(col("payload_l").bitwiseXOR(col("payload_r"))).as("hamming"))
+                   tokenHash: TokenHash = xxTokenHash): DataFrame =
+    hammingPairs(simhashSignatures(df, idCol, textCol, tokenHash), idCol, maxHamming, maxBucketSize)
+      .select("id_l", "id_r", "hamming")
+
+  /** The hamming-verified bucket pairs of an (id, sig, carry...)
+    * relation: id_l, id_r, the carried `_l`/`_r` columns, hamming. */
+  private def hammingPairs(sigs: DataFrame, idCol: String, maxHamming: Int, maxBucketSize: Int,
+                           carry: Seq[String] = Nil): DataFrame = {
+    val banded = sigs.select(col("*"), posexplode(simhashBands(col("sig"))).as(Seq("band", "bucket")))
+    pairsFromBuckets(banded, idCol, Seq("band", "bucket"), maxBucketSize, carry = "sig" +: carry)
+      .withColumn("hamming", bit_count(col("sig_l").bitwiseXOR(col("sig_r"))))
       .filter(col("hamming") <= maxHamming)
   }
 
@@ -680,8 +678,11 @@ object Dedup {
     * (shuffle ∝ |store|+|batch| small tuples), emit only pairs with a
     * new side. Old-old pairs were reported when THEIR batch arrived —
     * re-deriving them nightly would be O(corpus²/day) wasted work.
-    * Appends the new signatures to the store (the next night sees
-    * them). Returns (id_l, id_r, hamming) like [[simhashPairs]]. */
+    * Re-submitting an already-stored id is a no-op: the stored
+    * signature wins and the id is not a new side (see [[newSide]]), so
+    * its pairs never re-emit. Appends the new signatures to the store
+    * (the next night sees them). Returns (id_l, id_r, hamming) like
+    * [[simhashPairs]]. */
   def incrementalSimhashPairs(newDocs: DataFrame, idCol: String, textCol: String,
                               statePath: String,
                               maxHamming: Int = 3, maxBucketSize: Int = 1000,
@@ -689,29 +690,10 @@ object Dedup {
     val spark = newDocs.sparkSession
     val newSigs = simhashSignatures(newDocs, idCol, textCol, tokenHash).cache()
     val oldSigs = spark.read.parquet(statePath).select(col(idCol), col("sig"))
-    val newIds = newSigs.select(col(idCol))
-    val all = oldSigs.select(col(idCol), col("sig"), lit(false).as("__new"))
-      .union(newSigs.select(col(idCol), col("sig"), lit(true).as("__new")))
-      // a re-submitted id keeps its STORED signature (min_by on the
-      // boolean: false = old wins — deterministic)
-      .groupBy(col(idCol)).agg(min_by(col("sig"), col("__new")).as("sig"))
-    val banded = all.select(col(idCol), col("sig"),
-      posexplode(array((0 until 4).map(b =>
-        shiftright(col("sig"), b * 16).bitwiseAND(lit(0xFFFFL))): _*)).as(Seq("band", "bucket")))
-    // sig carried through the buckets — no verify join for the pair
-    // side to be mis-broadcast into (this exact line was the sf10
-    // 8 GiB broadcast crash; see pairsFromBucketsCarrying)
-    val pairs = pairsFromBucketsCarrying(banded, idCol, "sig",
-      Seq("band", "bucket"), maxBucketSize)
-      .select(col("id_l"), col("id_r"),
-        bit_count(col("payload_l").bitwiseXOR(col("payload_r"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-    // only pairs that involve the new batch (old-old already reported)
-    val withNew = pairs
-      .join(newIds.select(col(idCol).as("id_l")), Seq("id_l"), "left_semi")
-      .union(pairs.join(newIds.select(col(idCol).as("id_r")), Seq("id_r"), "left_semi")
-        .select("id_l", "id_r", "hamming"))
-      .distinct()
+    val all = newSide(oldSigs, newSigs, idCol, Seq("sig"))
+    val withNew = hammingPairs(all, idCol, maxHamming, maxBucketSize, carry = Seq(NewSide))
+      .filter(hasNewSide)
+      .select("id_l", "id_r", "hamming")
     // localCheckpoint severs the lineage from the store files BEFORE
     // the append grows them (a cached plan could re-evaluate against
     // the appended store and change the answer)
@@ -729,7 +711,13 @@ object Dedup {
     * maxIterations is hit); near-dup components are tiny, so 2-3
     * rounds in practice, and below `driverThreshold` edges a
     * path-compressed union-find on the driver skips the rounds
-    * entirely. Returns (id, canonical_id) for every id in a pair.
+    * entirely. Returns (id, canonical_id) for every id in a pair,
+    * already materialized — a driver-built local relation, or the
+    * distributed rounds' sealed checkpoint — so its plan reads no
+    * pair-side file and callers need no seal or cache of their own.
+    * The pairs' one-direction distinct edge set is built once (cached
+    * while it is counted and consumed); connectedComponents
+    * symmetrizes it.
     *
     * Why 1M edges as the default driver cutoff: the collect ships
     * 16 B/edge = 16 MB, and the union-find holds ≤ 2M boxed
@@ -744,8 +732,8 @@ object Dedup {
     * distributed branch is exercised by spec at driverThreshold = 0. */
   def canonicalize(pairs: DataFrame, maxIterations: Int = 10,
                    driverThreshold: Long = 1000000L): DataFrame = {
-    val edges = pairs.select(col("id_l").as("src"), col("id_r").as("dst"))
-      .union(pairs.select(col("id_r").as("src"), col("id_l").as("dst")))
+    val edges = pairs
+      .select(least(col("id_l"), col("id_r")).as("src"), greatest(col("id_l"), col("id_r")).as("dst"))
       .distinct().cache()
     // released on every exit: neither path's result reads it
     try {
@@ -753,7 +741,7 @@ object Dedup {
       // corpus (it is ~the true-dup count); below the threshold a
       // driver-side union-find beats log-rounds of shuffle joins. Above
       // it, fall through to distributed min-label propagation.
-      if (edges.count() / 2 <= driverThreshold) {
+      if (edges.count() <= driverThreshold) {
         val spark = pairs.sparkSession
         import spark.implicits._
         val parent = scala.collection.mutable.Map.empty[Long, Long]
@@ -765,9 +753,12 @@ object Dedup {
           r
         }
         val allIds = scala.collection.mutable.Set.empty[Long]
-        // collect from the cached edges relation (one direction) so the
-        // upstream pair pipeline is not re-executed
-        edges.filter(col("src") < col("dst"))
+        // collect from the cached edges so the upstream pair pipeline
+        // is not re-executed; self-loops are dropped here, above the
+        // cache (connectedComponents drops its own): beneath it the
+        // filter would be pushed into the pairs' plan and split it
+        // from the pairs' other reads
+        edges.filter(col("src") =!= col("dst"))
           .select(col("src").cast("long"), col("dst").cast("long")).collect().foreach { row =>
           allIds += row.getLong(0) += row.getLong(1)
           val (a, b) = (find(row.getLong(0)), find(row.getLong(1)))
@@ -777,7 +768,7 @@ object Dedup {
       } else {
         // distributed path: one min-label-propagation implementation
         // lives in Graph.connectedComponents (sealed result, caches
-        // dropped); the symmetric cached edge relation feeds it directly
+        // dropped), which symmetrizes the cached edges itself
         try Graph.connectedComponents(edges, "src", "dst", maxIterations)
           .select(col("node").as("id"), col("component").as("canonical_id"))
         catch {

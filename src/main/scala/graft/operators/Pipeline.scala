@@ -576,19 +576,20 @@ object Pipeline {
         .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/sigs"))
     val pairs = Dedup.simhashPairs(exact, idCol, textCol, maxHamming = maxHamming,
       tokenHash = tokenHash)
-    val canon = Dedup.canonicalize(pairs).cache()
+    val canon = Dedup.canonicalize(pairs)
     val keepIds = exact.select(col(idCol).as("id"))
       .join(canon, Seq("id"), "left")
       .filter(col("canonical_id").isNull || col("canonical_id") === col("id"))
       .select(col("id").as(idCol))
-    // canon and survivors both read only the cached canon/exact bases —
-    // the second independent write pair (guide §2.6)
+    // canon and survivors both read only materialized bases (canon
+    // comes back materialized, exact is cached) — the second
+    // independent write pair
     inParallel(
       () => canon.filter(col("canonical_id") =!= col("id"))
         .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/canon"),
       () => exact.join(keepIds, idCol).select(col(idCol), col(textCol))
         .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/survivors"))
-    hashed.unpersist(); exact.unpersist(); canon.unpersist()
+    hashed.unpersist(); exact.unpersist()
     exportLayout(docs.sparkSession, stateDir, idCol, textCol, nShards, hashedShard)
   }
 
@@ -687,9 +688,9 @@ object Pipeline {
         when(coalesce(col("__r_new"), lit(false)), col("id_r"))
           .otherwise(coalesce(col("__cr"), col("id_r"))).as("id_r"))
       .filter(col("id_l") =!= col("id_r"))
-    // sealed: everything below derives from the canon store files we
-    // overwrite at the end
-    val cc = Dedup.canonicalize(edges).localCheckpoint(true)
+    // canonicalize returns materialized rows: nothing below reads the
+    // canon store files through cc, so their overwrite is safe
+    val cc = Dedup.canonicalize(edges)
     // batch doc kept iff it is its component's minimum — a component
     // containing ANY old node has an old (smaller) minimum
     val keepIds = exactKept.select(col(idCol))

@@ -174,8 +174,7 @@ object Similarity {
     * next to the index for query-time reuse. */
   def buildIvfIndex(corpus: DataFrame, path: String, idCol: String, vecCol: String,
                     dim: Int, nCentroids: Int = 16, seed: Long = 42L,
-                    sampleKey: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column] = None,
-                    driftBase: Boolean = true): Array[Double] = {
+                    sampleKey: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column] = None): Array[Double] = {
     val flat = sampleCentroids(corpus, idCol, vecCol, dim, nCentroids, seed, sampleKey)
     val c = flat.length / dim
     val cell1 = VectorExpressions.nearestCentroids(col(vecCol), flat, dim, c, 1)
@@ -196,9 +195,7 @@ object Similarity {
         .partitionBy("__cell").parquet(path)
       ()
     }
-    if (driftBase)
-      Pipeline.inParallel(writeIndex +: driftBaseWrites(corpus, path, vecCol): _*)
-    else writeIndex()
+    Pipeline.inParallel(writeIndex +: driftBaseWrites(corpus, path, vecCol): _*)
     flat
   }
 

@@ -688,8 +688,8 @@ object StreamOps {
 
   /** Streaming NEAR-duplicate detection — the streaming twin of
     * Dedup.simhashPairs, built on the same one-pass SimHashSignature
-    * expression and 4×16-bit banding (hamming ≤ 3 exact by
-    * pigeonhole).
+    * expression and 4×16-bit banding, Dedup.simhashBands (hamming ≤ 3
+    * exact by pigeonhole).
     *
     * Shape: signature+banding are stateless map-side expressions; the
     * only state is per-(band,bucket) membership — at most
@@ -724,8 +724,7 @@ object StreamOps {
         col(tsCol).cast("timestamp").as("eventTime"))
       .select(col("id"), col("sig"), col("eventTime"),
         unix_millis(col("eventTime")).as("tsMillis"),
-        posexplode(array((0 until 4).map(b =>
-          shiftright(col("sig"), b * 16).bitwiseAND(lit(0xFFFFL))): _*)).as(Seq("band", "bucket")))
+        posexplode(graft.operators.Dedup.simhashBands(col("sig"))).as(Seq("band", "bucket")))
       .select((col("band").cast("long") * 65536L + col("bucket")).as("bucketKey"),
         col("id"), col("sig"), col("eventTime"), col("tsMillis"))
       .withWatermark("eventTime", s"$watermarkMinutes minutes")

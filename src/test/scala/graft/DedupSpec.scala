@@ -151,14 +151,15 @@ class DedupSpec extends SparkSpec {
     assert(uncapped.count == 50L * 49 / 2)
   }
 
-  test("pairsFromBucketsCarrying == pairsFromBuckets + payload join, caps included") {
+  test("pairsFromBuckets carry == pairsFromBuckets + payload join, caps included") {
     // multi-bucket membership (pair dedup across buckets), a bucket at
     // the cap boundary, and an over-cap bucket that must be dropped
     val rows = (1L to 30L).map(i => (i, i * 1000 + 7, "b" + (i % 3))) ++ // 3 buckets of 10
       (31L to 45L).map(i => (i, i * 1000 + 7, "hot")) ++                // over-cap bucket (15 > 10)
       Seq((1L, 1007L, "x"), (2L, 2007L, "x"))                           // cross-bucket repeat pair
     val bucketed = rows.toDF("id", "sig", "bucket")
-    val carrying = Dedup.pairsFromBucketsCarrying(bucketed, "id", "sig", Seq("bucket"), 10)
+    val carrying = Dedup.pairsFromBuckets(bucketed, "id", Seq("bucket"), 10, carry = Seq("sig"))
+      .select("id_l", "sig_l", "id_r", "sig_r")
     val reference = Dedup.pairsFromBuckets(bucketed.select("id", "bucket"), "id", Seq("bucket"), 10)
       .join(bucketed.select(col("id").as("id_l"), col("sig").as("payload_l")).distinct(), "id_l")
       .join(bucketed.select(col("id").as("id_r"), col("sig").as("payload_r")).distinct(), "id_r")
@@ -204,6 +205,21 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("canonicalize returns materialized rows: its plan reads no file, on either path") {
+    val path = java.nio.file.Files.createTempDirectory("graft_canon").toString + "/pairs"
+    Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_l", "id_r").write.parquet(path)
+    val pairs = spark.read.parquet(path)
+    for (threshold <- Seq(1000000L, 0L)) {
+      val canon = Dedup.canonicalize(pairs, driverThreshold = threshold)
+      val files = canon.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
+      }
+      assert(files.isEmpty, s"driverThreshold $threshold: ${canon.queryExecution.analyzed}")
+      assert(canon.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    }
+  }
+
   test("incremental exact: duplicates of stored hashes flagged, novel hashes enter the store") {
     val statePath = java.nio.file.Files.createTempDirectory("graft_incx").toString + "/hashes"
     Dedup.writeExactState(corpus, "id", "text", statePath)
@@ -244,6 +260,13 @@ class DedupSpec extends SparkSpec {
     val again = Dedup.incrementalSimhashPairs(
       docs.filter(col("doc_id") < 0), "doc_id", "text", statePath)
     assert(again.count() == 0) // empty batch -> no new pairs
+    assert(spark.read.parquet(statePath).count() == docs.count())
+
+    // RE-submitting already-stored docs is a no-op: no pair re-emits
+    // (the resubmitted ids are not "new sides") and the store does not
+    // grow duplicate rows
+    val resub = Dedup.incrementalSimhashPairs(batch2.limit(100), "doc_id", "text", statePath)
+    assert(resub.count() == 0)
     assert(spark.read.parquet(statePath).count() == docs.count())
   }
 

@@ -819,22 +819,28 @@ class PipelineSpec extends SparkSpec {
       (edited(s)._1, edited(s)._2, edited(s)._3) == ((base(s)._1, base(s)._2, base(s)._3))))
   }
 
-  test("prepareCorpusIncremental == full rebuild; state grows by the batch only") {
-    // permutations share a token multiset -> identical simhash
-    // signature (hamming 0), distinct normalized fingerprint: the
-    // deterministic near-dup fixture
-    val s1 = "alpha beta gamma delta epsilon zeta eta theta"
-    val s1p = "theta eta zeta epsilon delta gamma beta alpha"
-    val s1q = "beta alpha gamma delta epsilon zeta eta theta"
-    val s2 = "one two three four five six seven eight"
-    val s3 = "red orange yellow green blue indigo violet pink"
-    val s3p = "pink violet indigo blue green yellow orange red"
-    val s4 = "lorem ipsum dolor sit amet consectetur adipiscing elit"
-    val old = Seq(10L -> s1, 11L -> s1p, 20L -> s2, 30L -> s3).toDF("doc_id", "text")
-    val batch = Seq(100L -> s1q, 110L -> s2, 120L -> s4, 130L -> s3p).toDF("doc_id", "text")
+  // permutations share a token multiset -> identical simhash
+  // signature (hamming 0), distinct normalized fingerprint: the
+  // deterministic near-dup fixture
+  private val s1 = "alpha beta gamma delta epsilon zeta eta theta"
+  private val s2 = "one two three four five six seven eight"
+  private val s3 = "red orange yellow green blue indigo violet pink"
+  private def incOld = Seq(10L -> s1, 11L -> "theta eta zeta epsilon delta gamma beta alpha",
+    20L -> s2, 30L -> s3).toDF("doc_id", "text")
+  private def incBatch = Seq(100L -> "beta alpha gamma delta epsilon zeta eta theta", 110L -> s2,
+    120L -> "lorem ipsum dolor sit amet consectetur adipiscing elit",
+    130L -> "pink violet indigo blue green yellow orange red").toDF("doc_id", "text")
+  private def incState(): String = {
     val state = java.nio.file.Files.createTempDirectory("graft_inc_state").toString
-    Pipeline.writeCorpusState(old, "doc_id", "text", state, nShards = 2,
+    Pipeline.writeCorpusState(incOld, "doc_id", "text", state, nShards = 2,
       minTokens = 1, minStopwordRatio = 0.0, maxRepetition = 2.0)
+    state
+  }
+
+  test("prepareCorpusIncremental == full rebuild; state grows by the batch only") {
+    val old = incOld
+    val batch = incBatch
+    val state = incState()
     assert(spark.read.parquet(s"$state/fp").count() == 4)      // 4 distinct norms
     assert(spark.read.parquet(s"$state/sigs").count() == 4)    // all exact-survive
     assert(spark.read.parquet(s"$state/canon").collect()
@@ -867,5 +873,37 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$state/canon").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet ==
       Set(11L -> 10L, 100L -> 10L, 130L -> 30L, 200L -> 120L))
+  }
+
+  test("one prepareCorpusIncremental call stays within its job budget") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // every job the call starts, from any thread of its job group
+    def jobs(state: String): Int = {
+      val group = s"corpus-increment-${System.nanoTime()}"
+      val started = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+            started.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "increment")
+      try {
+        incPrep(state, incBatch)
+        org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
+        started.get
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+    }
+    // every job pays a scheduling floor on each crawl trigger's
+    // critical path, so a new job in the increment must be budgeted
+    val budget = 35
+    val counts = Seq(jobs(incState()), jobs(incState()))
+    info(s"jobs per increment: ${counts.mkString(", ")}")
+    assert(counts.distinct.size == 1, s"job count not deterministic: $counts")
+    assert(counts.head <= budget, s"one increment ran ${counts.head} jobs, budget $budget")
   }
 }

@@ -703,6 +703,19 @@ class SimilaritySpec extends SparkSpec {
     val inMemory = Similarity.ivfTopK(contents, queries, "vec_id", "embedding",
       "qid", "qvec", k = 3, dim = 8, nCentroids = 4, nProbe = 2)
     assert(fromStore.collect().map(_.toSeq).toSet == inMemory.collect().map(_.toSeq).toSet)
+
+    // the two-relation PQ layout: healthy when built, drifted by a
+    // shifted append
+    val pqPath = s"$root/pq"
+    val (pqFlat, cbs) = Similarity.buildIvfPqIndex(emb, pqPath, "vec_id", "embedding",
+      dim = 8, nCentroids = 4, m = 4, codes = 4, pqIters = 1)
+    val pqHealthy = Similarity.ivfMaintenanceDecision(spark, pqPath, "embedding", pq = true).collect()(0)
+    assert(!pqHealthy.getAs[Boolean]("rebuild_due"), pqHealthy.getAs[String]("reason"))
+    assert(pqHealthy.getAs[String]("reason") == "healthy")
+    Similarity.appendIvfPqIndex(drifted, pqPath, pqFlat, cbs, "vec_id", "embedding", dim = 8,
+      batchId = "driftbatch")
+    val pqAfter = Similarity.ivfMaintenanceDecision(spark, pqPath, "embedding", pq = true).collect()(0)
+    assert(pqAfter.getAs[Boolean]("drift_due"), pqAfter.getAs[String]("reason"))
   }
 
   test("rebuildIvfIndex crash property: retry converges at every step boundary; replay ledger survives the rebuild") {
